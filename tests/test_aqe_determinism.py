@@ -42,7 +42,7 @@ from __future__ import annotations
 
 import pytest
 
-from uchr_scetl_spark import load_registry
+from uchr_scetl_spark import clear_caches, load_registry
 
 from .conftest import SF_SMOKE
 from .spill_harness import canonical_digest
@@ -171,16 +171,14 @@ def test_kmeans_assign_invariant_under_aqe_off(spark):
     the memo so the WHOLE iterative pipeline — seed fetch, Lloyd
     rounds, final stats — reruns under the static plan and must stay
     bit-identical (the test_determinism.py companion, AQE axis)."""
-    from uchr_scetl_spark.llm.similarity import clear_similarity_caches
-
-    clear_similarity_caches(SF_SMOKE)
+    clear_caches(SF_SMOKE)
     baseline = canonical_digest(
         REGISTRY["sim_kmeans_assign"].fn(spark, SF_SMOKE)
     )
-    clear_similarity_caches(SF_SMOKE)
+    clear_caches(SF_SMOKE)
     with _conf_patch(spark, AQE_OFF):
         got = canonical_digest(
             REGISTRY["sim_kmeans_assign"].fn(spark, SF_SMOKE)
         )
-    clear_similarity_caches(SF_SMOKE)
+    clear_caches(SF_SMOKE)
     assert got == baseline

@@ -112,7 +112,6 @@ def test_dynamic_overwrite_never_leaks_into_concurrent_writes(spark, tmp_path):
     old shared-session window the racing write could compile under
     partitionOverwriteMode=dynamic and leave the second partition
     behind."""
-    from uchr_scetl_spark.memo import MEMO_LOCK
     from uchr_scetl_spark.operators import etl
 
     stop = threading.Event()
@@ -141,8 +140,7 @@ def test_dynamic_overwrite_never_leaks_into_concurrent_writes(spark, tmp_path):
     t.start()
     try:
         for _ in range(4):
-            with MEMO_LOCK:
-                etl._backfill_memo.clear()
+            etl._BACKFILL.clear()
             etl._backfill_dir(spark, SF_SMOKE)
     finally:
         stop.set()

@@ -123,12 +123,7 @@ def test_corpus_carries_control_bytes(ctrl_chars_dir):
 
 @pytest.mark.parametrize("key", GATE_KEYS)
 def test_text_key_is_exact_on_control_chars(key, spark, ctrl_chars_dir):
-    from uchr_scetl_spark.llm.text import clear_text_caches
-
-    try:
-        clear_text_caches(ctrl_chars_dir)
-    except Exception:
-        clear_caches(ctrl_chars_dir)
+    clear_caches(ctrl_chars_dir)
     con = oracle_connection(ctrl_chars_dir)
     try:
         spec = REGISTRY[key]

@@ -11,7 +11,7 @@ What must hold for the exponents to mean anything:
   their fan-out and every join exponent reads too low);
 - document growth must NOT be exact-twin replication (distinct texts,
   shared vocabulary, constant near-dup injection) — the precise defect
-  of scaling_probe's replicas that this generator exists to fix;
+  of the old scaling probe's replicas that this generator exists to fix;
 - embeddings keep dim/labels so the clustering keys stay well-posed.
 """
 

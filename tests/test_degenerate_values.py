@@ -639,9 +639,8 @@ def test_extreme_embedding_magnitudes_fail_loudly(
     everywhere else. The mapInPandas batch now enforces the domain
     bound itself, so all four micro-quantized embedding keys RAISE —
     zero silent corruptions, matching the NaN/Inf contract."""
-    from uchr_scetl_spark.llm.similarity import clear_similarity_caches
 
-    clear_similarity_caches(extreme_emb_value_dir)
+    clear_caches(extreme_emb_value_dir)
     with pytest.raises(Exception):
         REGISTRY[key].fn(spark, extreme_emb_value_dir).toPandas()
 

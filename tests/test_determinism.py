@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import pytest
 
-from uchr_scetl_spark import load_registry
+from uchr_scetl_spark import clear_caches, load_registry
 
 from .conftest import SF_SMOKE
 
@@ -211,17 +211,15 @@ def test_kmeans_assign_invariant_with_fresh_centroids(spark):
     seed fetch, both Lloyd updates, final stats — recomputes under
     shuffle.partitions=7 and must still be bit-identical (exact
     integer arithmetic is the claim)."""
-    from uchr_scetl_spark.llm.similarity import clear_similarity_caches
-
-    clear_similarity_caches(SF_SMOKE)
+    clear_caches(SF_SMOKE)
     baseline = _rows(spark, "sim_kmeans_assign")
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
-        clear_similarity_caches(SF_SMOKE)
+        clear_caches(SF_SMOKE)
         assert _rows(spark, "sim_kmeans_assign") == baseline, (
             "sim_kmeans_assign changed results under shuffle.partitions=7"
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
-        clear_similarity_caches(SF_SMOKE)
+        clear_caches(SF_SMOKE)

@@ -148,9 +148,8 @@ def test_key_is_exact_on_nonreserved_separators(key, spark, sep_dir):
     """chr(28)-chr(30) inside tokens are ordinary bytes: every text
     consumer — including the encoded-segmentation BPE keys, where they
     become ordinary one-char symbols — must be engine-exact."""
-    from uchr_scetl_spark.llm.text import clear_text_caches
 
-    clear_text_caches(sep_dir)
+    clear_caches(sep_dir)
     con = oracle_connection(sep_dir)
     try:
         spec = REGISTRY[key]
@@ -169,9 +168,8 @@ def test_nonencoded_key_is_exact_on_reserved_separator(key, spark, us_dir):
     does NOT ride the chr(31) segmentation encoding — including
     text_bpe_pair_counts (direct substring char pairs) and the
     normalizer (which collapses it to a space on both engines)."""
-    from uchr_scetl_spark.llm.text import clear_text_caches
 
-    clear_text_caches(us_dir)
+    clear_caches(us_dir)
     con = oracle_connection(us_dir)
     try:
         spec = REGISTRY[key]
@@ -192,13 +190,12 @@ def test_bpe_encoded_keys_fail_loudly_on_inband_chr31(key, spark, us_dir):
     learned merge table."""
     import duckdb
 
-    from uchr_scetl_spark.llm.text import clear_text_caches
 
-    clear_text_caches(us_dir)
+    clear_caches(us_dir)
     spec = REGISTRY[key]
     with pytest.raises(Exception, match="text_bpe"):
         spec.fn(spark, us_dir).toPandas()
-    clear_text_caches(us_dir)
+    clear_caches(us_dir)
     con = oracle_connection(us_dir)
     try:
         with pytest.raises(duckdb.Error, match="text_bpe"):

@@ -131,9 +131,8 @@ def test_model_space_key_is_exact_on_mixed_dims(key, spark, mixed_dim_dir):
     identically on both engines, every model-space key value-matches
     its oracle on the violating corpus — no crash, no silent
     mis-index."""
-    from uchr_scetl_spark.llm.similarity import clear_similarity_caches
 
-    clear_similarity_caches(mixed_dim_dir)
+    clear_caches(mixed_dim_dir)
     con = oracle_connection(mixed_dim_dir)
     try:
         spec = REGISTRY[key]

@@ -5,7 +5,7 @@ stops pushing down, a window sneaking into global top-k) fails CI."""
 
 from __future__ import annotations
 
-from uchr_scetl_spark import load_registry
+from uchr_scetl_spark import clear_caches, load_registry
 
 from .conftest import SF_SMOKE
 
@@ -342,9 +342,7 @@ def test_copurchase_edges_have_no_lineitem_self_join(spark):
     The edge memo is cleared first: a warm cache would collapse the
     build into an InMemoryTableScan and make the assertion vacuous
     (and dependent on which test ran before this one)."""
-    from uchr_scetl_spark.operators.graph import clear_graph_caches
-
-    clear_graph_caches(SF_SMOKE)
+    clear_caches(SF_SMOKE)
     plan = plan_of(spark, "graph_copurchase_topk")
     for op in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
         assert op not in plan, plan
@@ -376,8 +374,6 @@ def test_bpe_merge_rounds_scan_corpus_once(spark):
     import shutil
     import tempfile
 
-    from uchr_scetl_spark import clear_caches
-
     out = tempfile.mkdtemp(prefix="uchr_bpe_plan_")
     try:
         shutil.copyfile(
@@ -401,13 +397,13 @@ def test_bpe_merge_rounds_scan_corpus_once(spark):
         # vocabulary relation the trainer aggregates per round
         from uchr_scetl_spark.llm import text as T
 
-        vocab = [v for k, v in T._bpe_vocab_memo.items() if k[1] == out]
-        assert len(vocab) == 1, list(T._bpe_vocab_memo)
+        vocab = T._BPE_VOCAB.values(out)
+        assert len(vocab) == 1, vocab
         vplan = vocab[0]._jdf.queryExecution().analyzed().toString()
         assert vplan.count("documents.parquet") <= 1, vplan
-        assert [r for rs in (
-            [x for x in T._bpe_train_memo.items() if x[0][1] == out]
-        ) for r in rs], "train memo must hold the corpus's merges"
+        assert [
+            r for _, rows in T._BPE_TRAIN.values(out) for r in rows
+        ], "train memo must hold the corpus's merges"
     finally:
         clear_caches(out)
         shutil.rmtree(out, ignore_errors=True)
@@ -482,8 +478,7 @@ def test_containment_join_carries_int_shingles_no_cartesian(spark):
 
     sh_plans = [
         v._jdf.queryExecution().analyzed().toString()
-        for k, v in D._shingled_memo.items()
-        if k[1] == SF_SMOKE
+        for v in D._SHINGLED.values(SF_SMOKE)
     ]
     assert sh_plans and any("xxhash64" in p for p in sh_plans), sh_plans
 
@@ -497,9 +492,7 @@ def test_triangle_count_wedges_from_collect_set(spark):
     and no join keys on raw lineitem columns. (The deg annotation
     joins are equi-joins over the derived — cached — relations, not
     re-scans.)"""
-    from uchr_scetl_spark.operators.graph import clear_graph_caches
-
-    clear_graph_caches(SF_SMOKE)
+    clear_caches(SF_SMOKE)
     plan = plan_of(spark, "graph_triangle_count")
     # every join operator in the plan works on DERIVED relations (deg
     # annotation, wedge-closing) — a raw-lineitem join key in any join
@@ -557,9 +550,7 @@ def test_kmeans_assign_is_joinless_single_exchange(spark):
     aggregation (partial+final on `cluster`). A hash/sort-merge join
     or a second hash exchange means the scalar-attach formulation
     regressed to a real centroid-relation join."""
-    from uchr_scetl_spark.llm.similarity import clear_similarity_caches
-
-    clear_similarity_caches(SF_SMOKE)
+    clear_caches(SF_SMOKE)
     plan = plan_of(spark, "sim_kmeans_assign")
     for op in (
         "SortMergeJoin",
@@ -598,9 +589,7 @@ def test_association_rules_filter_before_item_joins_no_order_self_join(spark):
     means the pair relation regressed), and the min-support filter
     must prune the pair side BEFORE the item-count joins (the filter
     appears below the joins in the executed plan, not above)."""
-    from uchr_scetl_spark.operators.graph import clear_graph_caches
-
-    clear_graph_caches(SF_SMOKE)
+    clear_caches(SF_SMOKE)
     plan = plan_of(spark, "orders_association_rules")
     for ln in plan.splitlines():
         if "SortMergeJoin" in ln or "ShuffledHashJoin" in ln:
@@ -711,9 +700,7 @@ def test_jaccard_neighbors_broadcasts_probe_bounded_sides(spark):
     adjacency and the probe-bounded common/degree relations broadcast,
     and no join line touches raw lineitem keys (the edge build is the
     shared memoized no-self-join relation)."""
-    from uchr_scetl_spark.operators.graph import clear_graph_caches
-
-    clear_graph_caches(SF_SMOKE)
+    clear_caches(SF_SMOKE)
     plan = plan_of(spark, "graph_jaccard_neighbors")
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan

@@ -613,14 +613,11 @@ def test_kmeans_partitions_the_corpus_and_improves_on_seeds(spark):
     two Lloyd updates must not do WORSE than assigning to the raw
     seed centroids (monotone non-increasing objective is Lloyd's
     defining property; equality allowed for degenerate corpora)."""
-    from uchr_scetl_spark.llm.similarity import (
-        _kmeans_assign_df,
-        _kmeans_quantized,
-        clear_similarity_caches,
-    )
+    from uchr_scetl_spark import clear_caches
+    from uchr_scetl_spark.llm.similarity import _kmeans_assign_df, _kmeans_quantized
     from uchr_scetl_spark.registry import load_registry
 
-    clear_similarity_caches(SF_SMOKE)
+    clear_caches(SF_SMOKE)
     R = load_registry()
     rows = R["sim_kmeans_assign"].fn(spark, SF_SMOKE).collect()
     assert rows
@@ -649,7 +646,7 @@ def test_kmeans_partitions_the_corpus_and_improves_on_seeds(spark):
         .collect()[0][0]
     )
     assert final_sse <= seed_sse
-    clear_similarity_caches(SF_SMOKE)
+    clear_caches(SF_SMOKE)
 
 
 def test_gram_matrix_is_symmetric_psd_with_consistent_diagonal(spark):

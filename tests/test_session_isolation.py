@@ -123,11 +123,10 @@ def test_conf_isolated_session_prunes_dead_apps(spark):
     app's session state)."""
     from uchr_scetl_spark import session as sess
 
-    with sess._CHILD_LOCK:
-        sess._CHILD_SESSIONS[("dead-app-id", "x")] = object()
+    dead = ("dead-app-id", None, None, "x")
+    sess._CHILDREN._entries[dead] = object()
     conf_isolated_session(spark, "gate-prune", {})
-    with sess._CHILD_LOCK:
-        assert ("dead-app-id", "x") not in sess._CHILD_SESSIONS
+    assert dead not in sess._CHILDREN._entries
 
 
 def test_conf_isolated_child_dataframes_run(spark):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from uchr_scetl_spark import load_registry
+from uchr_scetl_spark import clear_caches, load_registry
 
 from .conftest import SF_ORACLE
 
@@ -42,10 +42,8 @@ def test_ivf_deterministic(spark):
     cache (added round 5) would make back-to-back runs trivially equal,
     so it is cleared between them — this must still pass because init
     is lowest-vec_id seeded and every step is order-independent."""
-    from uchr_scetl_spark.llm.similarity import clear_similarity_caches
-
     a = sorted(map(tuple, REGISTRY["sim_topk_ivf"].fn(spark, SF_ORACLE).collect()))
-    clear_similarity_caches(SF_ORACLE)
+    clear_caches(SF_ORACLE)
     b = sorted(map(tuple, REGISTRY["sim_topk_ivf"].fn(spark, SF_ORACLE).collect()))
     assert a == b
 

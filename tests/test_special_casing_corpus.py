@@ -125,9 +125,8 @@ def test_corpus_carries_special_casing(special_casing_dir):
 def test_key_is_exact_on_special_casing_text(key, spark, special_casing_dir):
     """Case-mapping-free paths (split/hash/count) and the ASCII-fold
     dedup canonicalization must be engine-exact on ß/ﬁ/İ text."""
-    from uchr_scetl_spark.llm.text import clear_text_caches
 
-    clear_text_caches(special_casing_dir)
+    clear_caches(special_casing_dir)
     con = oracle_connection(special_casing_dir)
     try:
         spec = REGISTRY[key]

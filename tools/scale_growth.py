@@ -6,8 +6,8 @@ argument checked at sf0.1": 1x/3x/10x spans two decades of input
 volume (sf0.1 -> sf1.0 equivalent, 6M lineitem rows / 50k docs), the
 corpora come from sources/corpus_scale.extend_corpus (realistic
 growth — shingle df spread, constant dup rate, self-consistent TPC-H
-replicas — NOT the exact-twin replication of scaling_probe.py whose
-quadratic true-output artifact poisons the self-join families), and
+replicas — NOT exact-twin replication, whose quadratic true-output
+artifact poisons the self-join families), and
 the fitted exponent turns "linear by design" into a number.
 
 Exponent fit: least-squares slope of log(wall) vs log(factor) over the
@@ -30,8 +30,7 @@ fix or a documented cap proof.
 Keys are run key-outer (all factors back-to-back per key) so every
 key sees the same memo-warm state in each dir, and the whole run
 starts with a warmup pass over a throwaway 1x dir so codegen/Arrow
-one-time costs are paid before any measurement (same discipline as
-scaling_probe.py).
+one-time costs are paid before any measurement.
 
 Usage: python tools/scale_growth.py [-r REPS] [--factors 1,3,10]
            [--json OUT] [--longtail F] [sf_dir] [key ...]

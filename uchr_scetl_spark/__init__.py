@@ -12,27 +12,6 @@ hold up at 100 TB (no driver-side loops, no unbounded pairwise work).
 
 __version__ = "0.1.0"
 
+from .memo import clear_caches  # noqa: F401
 from .registry import REGISTRY, QuerySpec, load_registry, query  # noqa: F401
 from .session import configure, get_session  # noqa: F401
-
-
-def clear_caches(sf_dir: str | None = None) -> None:
-    """Unpersist and drop every per-session relation memo (shingles,
-    MinHash/SimHash signatures, verified pairs, IVF base + centroids,
-    weighted co-purchase edges, derived partsupp) — all
-    entries, or just one corpus dir's. Long-lived sessions sweeping
-    many corpus dirs should call this when retiring a dir; sessions
-    re-reading a REWRITTEN dir must, or they'll be served stale cached
-    relations. Imports lazily so `import uchr_scetl_spark` stays
-    cheap."""
-    from .llm.dedup import clear_dedup_caches
-    from .llm.similarity import clear_similarity_caches
-    from .llm.text import clear_text_caches
-    from .operators.graph import clear_graph_caches
-    from .plans.tpch import clear_tpch_caches
-
-    clear_dedup_caches(sf_dir)
-    clear_similarity_caches(sf_dir)
-    clear_text_caches(sf_dir)
-    clear_graph_caches(sf_dir)
-    clear_tpch_caches(sf_dir)

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def dec_sum(col: Column | str, alias: str, scale: int = 6) -> Column:
@@ -104,13 +105,12 @@ def literal_rows_df(spark, rows, schema: str):
     (measured: 32 near-empty Python tasks and ~0.3 s per tiny frame —
     the round-15 BPE-trainer lesson, applied engine-wide in round 16).
 
-    ``schema`` is the usual "name type, name type" DDL string; values
-    are cast per field, so Python ints/bools/None land as the declared
-    Spark types exactly as they did through createDataFrame."""
-    fields = [
-        (f.strip().rsplit(" ", 1)[0], f.strip().rsplit(" ", 1)[1])
-        for f in schema.split(",")
-    ]
+    ``schema`` is the usual "name type, name type" DDL string, parsed
+    by Spark's own DDL parser (types may contain commas, as in
+    ``decimal(12,2)`` or ``map<string,int>``); values are cast per
+    field, so Python ints/bools/None land as the declared Spark types
+    exactly as they did through createDataFrame."""
+    fields = [(f.name, f.dataType) for f in StructType.fromDDL(schema).fields]
     if not rows:
         return spark.range(0).select(
             *[F.lit(None).cast(t).alias(n) for n, t in fields]

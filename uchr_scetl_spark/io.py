@@ -9,12 +9,10 @@ driver. The ``events`` nanosecond normalisation is a column expression
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import LOGICAL, TABLES
+from .schemas import LOGICAL, TABLES, table_path
 from .session import configure
 
 
@@ -30,10 +28,6 @@ def scratch_dir(prefix: str) -> str:
     out = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     return out
-
-
-def table_path(sf_dir: str, name: str) -> str:
-    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from ..memo import memo_clear, memo_get
+from ..memo import Memo
 from ..session import default_parallelism
 from ..session import stable_checkpoint, stable_checkpoint_lazy
 
@@ -227,7 +227,7 @@ _SHINGLE_SQL = f"""
 
 # One shingled-documents relation per sf_dir, cached and shared by the
 # three shingle consumers (ngram Jaccard, MinHash LSH, verify step).
-_shingled_memo: dict[tuple[str, str], DataFrame] = {}
+_SHINGLED = Memo()
 
 
 def shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,9 +254,6 @@ def shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-file parquet table scans as ONE partition, so all shingle
     CPU otherwise lands on one core.
     """
-    # applicationId, not id(spark): a GC'd session's id can be reused
-    # by a new session in the same process, silently aliasing the cache
-    key = (spark.sparkContext.applicationId, sf_dir)
 
     def _build() -> DataFrame:
         d = load(spark, sf_dir, "documents")
@@ -273,7 +270,7 @@ def shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cache()
         )
 
-    return memo_get(_shingled_memo, key, _build)
+    return _SHINGLED.get(spark, sf_dir, build=_build)
 
 
 def shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -283,9 +280,8 @@ def shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# keyed (appId, sf_dir, n) for MinHash and (appId, sf_dir, "simhash")
-# for the packed SimHash relation — sf_dir is always index 1 (eviction)
-_signature_memo: dict[tuple, DataFrame] = {}
+# parts (n,) for MinHash and ("simhash",) for the packed SimHash relation
+_SIGNATURES = Memo()
 
 
 def minhash_signatures(
@@ -304,7 +300,6 @@ def minhash_signatures(
     dedup_near and dedup_near_survivors reference the signature
     relation — uncached, the survivors key re-executes the whole
     subtree."""
-    key = (spark.sparkContext.applicationId, sf_dir, n)
 
     def _build() -> DataFrame:
         sh = shingled_docs(spark, sf_dir)
@@ -318,7 +313,7 @@ def minhash_signatures(
             ],
         ).cache()
 
-    return memo_get(_signature_memo, key, _build)
+    return _SIGNATURES.get(spark, sf_dir, n, build=_build)
 
 
 def band_buckets(sigs: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
@@ -455,31 +450,13 @@ def dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 # would otherwise re-execute the whole candidate pipeline. Same pattern
 # (and same lifetime) as the shingle/signature memos above; at 100 TB
 # the persisted-pairs table plays this role.
-_pairs_memo: dict[tuple[str, str, str], DataFrame] = {}
+_PAIRS = Memo()
 
 
 def _memo_pairs(
     tag: str, spark: SparkSession, sf_dir: str, df: DataFrame
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    return memo_get(_pairs_memo, key, lambda: df.cache())
-
-
-def clear_dedup_caches(sf_dir: str | None = None) -> None:
-    """Unpersist and drop the shingle/signature/pair memos — all of
-    them, or just one corpus dir's entries.
-
-    The memos otherwise live for the session: a long-lived process
-    sweeping many corpus dirs (bench loops, the scaling probe) would
-    accumulate executor storage indefinitely, and a REGENERATED corpus
-    at the same path would be served stale cached relations. Call this
-    after retiring a corpus dir (or before re-reading a rewritten
-    one). Memo keys are (applicationId, sf_dir[, tag]) with sf_dir
-    always at index 1. Insertion, lookup and eviction all serialize on
-    the shared memo lock (memo.py); stopped-session entries are pruned
-    on access."""
-    for memo in (_shingled_memo, _signature_memo, _pairs_memo):
-        memo_clear(memo, sf_dir)
+    return _PAIRS.get(spark, sf_dir, tag, build=lambda: df.cache())
 
 
 _ORACLE_INCREMENTAL = f"""
@@ -922,8 +899,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of a zip_with/aggregate HOF fold that allocates two
     # arrays per row — measured 1.9s → 1.2s for the whole key, output
     # bit-identical.
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "simhash")
-
     def _build() -> DataFrame:
         d = load(spark, sf_dir, "documents")
         return (
@@ -935,7 +910,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cache()
         )
 
-    sig = memo_get(_signature_memo, memo_key, _build)
+    sig = _SIGNATURES.get(spark, sf_dir, "simhash", build=_build)
     exploded = sig.select(
         "doc_id",
         "packed",

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load
-from ..memo import memo_clear, memo_get
+from ..memo import Memo
 from ..registry import query
 from ..session import stable_checkpoint
 
@@ -345,14 +345,10 @@ KMEANS_ITERS = 1
 # over the cached relation. Normalization is pure JVM array algebra
 # (sqrt-of-dot + transform divide): a pandas_udf here cost a Python
 # worker round-trip on every pass over the base.
-_ivf_base_memo: dict[tuple[str, str], DataFrame] = {}
+_IVF_BASE = Memo()
 
 
 def _ivf_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # applicationId, not id(spark): a GC'd session's id can be reused
-    # by a new session in the same process, silently aliasing the cache
-    key = (spark.sparkContext.applicationId, sf_dir)
-
     def _build() -> DataFrame:
         return (
             load(spark, sf_dir, "embeddings")
@@ -372,20 +368,7 @@ def _ivf_base(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cache()
         )
 
-    return memo_get(_ivf_base_memo, key, _build)
-
-
-def clear_similarity_caches(sf_dir: str | None = None) -> None:
-    """Unpersist and drop the IVF base/centroid memos — all of them,
-    or just one corpus dir's entries (see clear_dedup_caches for why:
-    unbounded session-lifetime memos leak storage across corpus
-    sweeps and serve stale data for rewritten dirs). Lock-guarded via
-    the shared memo helpers; stopped-session entries also prune on
-    access."""
-    memo_clear(_ivf_base_memo, sf_dir)
-    memo_clear(_ivf_centroids_memo, sf_dir)
-    memo_clear(_kmeans_q_memo, sf_dir)
-    memo_clear(_kmeans_cent_memo, sf_dir)
+    return _IVF_BASE.get(spark, sf_dir, build=_build)
 
 
 def _cells_udf(cents: list[list[float]], nprobe: int):
@@ -419,7 +402,7 @@ def _cells_udf(cents: list[list[float]], nprobe: int):
 # test, bench reps, and any pipeline running IVF more than once per
 # session). The 100 TB analogue: persist the trained coarse quantizer
 # alongside the index, never re-train per query.
-_ivf_centroids_memo: dict[tuple[str, str], list[list[float]]] = {}
+_IVF_CENTROIDS = Memo()
 
 
 def _ivf_centroids(spark: SparkSession, sf_dir: str, e: DataFrame) -> list[list[float]]:
@@ -434,7 +417,6 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str, e: DataFrame) -> list[list[
       cached corpus, update = posexplode → groupBy(cell, dim) avg —
       the shuffle carries C×dim partial sums, never the vectors —
       collected as the final centroid table."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
 
     def _build() -> list[list[float]]:
         init = e.orderBy("vec_id").limit(N_CENTROIDS).select("vn").collect()
@@ -467,7 +449,7 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str, e: DataFrame) -> list[list[
     # the build collects under the memo lock — bounded (C×dim doubles,
     # the documented exception) and intended: concurrent callers must
     # not run duplicate k-means jobs
-    return memo_get(_ivf_centroids_memo, memo_key, _build)
+    return _IVF_CENTROIDS.get(spark, sf_dir, build=_build)
 
 
 @query("sim_topk_ivf", tags=("rows-only",))
@@ -1145,8 +1127,8 @@ KMEANS_ASSIGN_SCALE = 1_000_000  # component quantization (floor at 1e-6)
 KMEANS_ASSIGN_ROUNDS = 2  # centroid updates; assignments run ROUNDS+1 times
 KMEANS_ASSIGN_DIM = 64  # embedding dimensionality (oracle mirror only)
 
-_kmeans_q_memo: dict[tuple[str, str], DataFrame] = {}
-_kmeans_cent_memo: dict[tuple[str, str], list[list[int]]] = {}
+_KMEANS_Q = Memo()
+_KMEANS_CENTROIDS = Memo()
 
 
 def _kmeans_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1156,7 +1138,6 @@ def _kmeans_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition layouts and reduction orders (floats would make Lloyd's
     argmin order-sensitive near ties). Cached: the relation is read by
     ROUNDS+1 assignment passes."""
-    key = (spark.sparkContext.applicationId, sf_dir)
 
     def _build() -> DataFrame:
         e = load(spark, sf_dir, "embeddings").where(emb_conform())
@@ -1168,7 +1149,7 @@ def _kmeans_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("qv"),
         ).cache()
 
-    return memo_get(_kmeans_q_memo, key, _build)
+    return _KMEANS_Q.get(spark, sf_dir, build=_build)
 
 
 def _kmeans_assign_df(q: DataFrame, cents: list[list[int]]) -> DataFrame:
@@ -1233,7 +1214,6 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
     SQL as (s - pmod(s, n)) / n (DuckDB's // truncates toward zero, so
     the remainder is subtracted first — exact for negative sums too).
     Empty clusters keep their previous centroid."""
-    key = (spark.sparkContext.applicationId, sf_dir)
 
     def _build() -> list[list[int]]:
         q = _kmeans_quantized(spark, sf_dir)
@@ -1281,7 +1261,7 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
             ]
         return cents
 
-    return memo_get(_kmeans_cent_memo, key, _build)
+    return _KMEANS_CENTROIDS.get(spark, sf_dir, build=_build)
 
 
 def _kmeans_oracle() -> str:

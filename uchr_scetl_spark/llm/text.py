@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load
-from ..memo import memo_clear, memo_get, memo_get_heavy
+from ..memo import Memo
 from ..registry import query
 from ..session import default_parallelism
 
@@ -1055,26 +1055,18 @@ def _bpe_sy() -> F.Column:
     return F.filter(F.split("s", _BPE_SEP), lambda x: x != F.lit(""))
 
 
-# (appId, sf_dir) → cached chr(31)-wrapped vocabulary — shared by the
-# merge-table and apply keys; evicted via clear_text_caches/clear_caches
-_bpe_vocab_memo: dict[tuple[str, str], DataFrame] = {}
-# (appId, sf_dir) → (final re-segmented vocab DataFrame, per-round
-# merge-row tuples) — the TRAINED result. Round 15: the per-round
-# argmax is a bounded 1-row collect (an eager job), so an unmemoized
-# _bpe_train would re-run all R argmax jobs in EVERY consumer key
+# cached chr(31)-wrapped vocabulary — shared by the merge-table and
+# apply keys
+_BPE_VOCAB = Memo()
+# (final re-segmented vocab DataFrame, per-round merge-row tuples) —
+# the TRAINED result. Round 15: the per-round argmax is a bounded
+# 1-row collect (an eager job), so an unmemoized _bpe_train would
+# re-run all R argmax jobs in EVERY consumer key
 # (text_bpe_apply_merges AND text_bpe_merge_rounds); the memo makes
 # training once-per-(session, corpus), which is also the only sane
 # production shape (nobody re-trains a tokenizer per downstream
-# query). Evicted with the vocab memo.
-_bpe_train_memo: dict[tuple[str, str], tuple] = {}
-
-
-def clear_text_caches(sf_dir: str | None = None) -> None:
-    """Unpersist and drop the BPE vocabulary + trained-merges memos —
-    all entries, or one corpus dir's (same contract as
-    llm.dedup.clear_dedup_caches)."""
-    memo_clear(_bpe_vocab_memo, sf_dir)
-    memo_clear(_bpe_train_memo, sf_dir)
+# query).
+_BPE_TRAIN = Memo()
 
 
 def _bpe_train(
@@ -1086,7 +1078,6 @@ def _bpe_train(
     across the two keys AND evictable, unlike a bare .cache()); each
     round is a vocab pair count → 1-row argmax → broadcast
     re-segmentation."""
-    key = (spark.sparkContext.applicationId, sf_dir)
 
     def _build() -> DataFrame:
         d = load(spark, sf_dir, "documents")
@@ -1132,12 +1123,12 @@ def _bpe_train(
     # a literal-replace chain on the CACHED vocab, nothing nested —
     # and because the collects are eager, the WHOLE trained result is
     # memoized per (session, corpus) so the second consumer key pays
-    # zero argmax jobs (see _bpe_train_memo). A/B + oracle evidence
+    # zero argmax jobs (see _BPE_TRAIN). A/B + oracle evidence
     # in OPTIMIZATION_r15.md. BPE training is inherently sequential
     # in R; at 100 TB the vocab relation (the only thing scanned per
     # round) is already ≪ corpus.
     def _train() -> tuple[DataFrame, list[list[tuple]]]:
-        v = memo_get(_bpe_vocab_memo, key, _build)
+        v = _BPE_VOCAB.get(spark, sf_dir, build=_build)
         # sy[i-1]/sy[i] is 0-based element access; the filter() guard
         # yields an EMPTY index list for single-symbol words
         # (sequence(1,0) would generate a DESCENDING [1,0] — a Spark
@@ -1180,7 +1171,7 @@ def _bpe_train(
             )
         return v, rows
 
-    v, rows = memo_get_heavy(_bpe_train_memo, key, _train)
+    v, rows = _BPE_TRAIN.get_heavy(spark, sf_dir, build=_train)
     # one-row JVM relations (range(1) + literal projection), NOT
     # createDataFrame(list): the latter parallelizes each tiny list
     # across defaultParallelism partitions through the Python-RDD

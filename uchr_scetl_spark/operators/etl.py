@@ -17,7 +17,7 @@ import threading
 
 from ..io import load, scratch_dir
 from ..exprs import dec_sum, literal_rows_df
-from ..memo import memo_get_heavy
+from ..memo import Memo
 from ..registry import query
 from ..session import conf_isolated_session, stable_checkpoint
 
@@ -404,7 +404,7 @@ def etl_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_backfill_memo: dict[tuple[str, str], str] = {}
+_BACKFILL = Memo(evict=False)
 
 # Applied once to a dedicated conf_isolated_session child (round 14):
 # the old set-then-restore on the caller's session could leak dynamic
@@ -433,10 +433,7 @@ def _backfill_dir(spark: SparkSession, sf_dir: str) -> str:
     is permanent, so nothing is mutated on the caller's session). The
     initial landing write is mode-equivalent under dynamic: the
     scratch dir is fresh, so 'delete only partitions the write
-    contains' and 'truncate the table' coincide. Memoized via
-    memo_get_heavy — the build runs two distributed write jobs, which
-    must not hold MEMO_LOCK; a raced duplicate lands the same bytes
-    in a second scratch dir that atexit reaps."""
+    contains' and 'truncate the table' coincide."""
 
     def _build() -> str:
         child = conf_isolated_session(
@@ -466,8 +463,7 @@ def _backfill_dir(spark: SparkSession, sf_dir: str) -> str:
         ).parquet(out)
         return out
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return memo_get_heavy(_backfill_memo, key, _build)
+    return _BACKFILL.get_heavy(spark, sf_dir, build=_build)
 
 
 @query(
@@ -729,7 +725,7 @@ def etl_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_zorder_memo: dict[tuple[str, str], str] = {}
+_ZORDER = Memo(evict=False)
 
 
 def _zvalue(x: F.Column, y: F.Column, bits: int = 21) -> F.Column:
@@ -758,8 +754,8 @@ def _zorder_dir(spark: SparkSession, sf_dir: str) -> str:
     sortWithinPartitions(z) → parquet. Range partitioning keeps file
     count fixed AND gives every file a tight z-range, which is what
     makes BOTH dimensions' parquet min/max stats selective."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _zorder_memo:
+
+    def _build() -> str:
         o = load(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_custkey",
@@ -777,8 +773,9 @@ def _zorder_dir(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(out)
         )
-        _zorder_memo[key] = out
-    return _zorder_memo[key]
+        return out
+
+    return _ZORDER.get_heavy(spark, sf_dir, build=_build)
 
 
 @query(

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load
-from ..memo import memo_clear, memo_get, memo_get_heavy
+from ..memo import Memo
 from ..registry import query
 from ..session import stable_checkpoint_lazy
 
@@ -194,28 +194,19 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # One weighted-edge relation per (app, sf_dir), cached and shared by
-# the degree-distribution and market-basket keys (same pattern and
-# lifetime as the dedup shingle memo; evicted via clear_graph_caches).
-_copurchase_memo: dict[tuple[str, str], DataFrame] = {}
+# the degree-distribution and market-basket keys.
+_COPURCHASE = Memo()
 # Its edge count, memoized alongside (one count() job on the cached
 # relation per corpus) — the single size probe behind _bcast_if.
-_copurchase_count_memo: dict[tuple[str, str], int] = {}
+_COPURCHASE_COUNT = Memo()
 
 
 def _copurchase_is_small(spark: SparkSession, sf_dir: str) -> bool:
     """True when the memoized co-purchase edge relation is under
     `_BCAST_EDGE_GATE` rows — the one size probe gating every
     node-sized broadcast hint in this module (see gate comment)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # memo_get_heavy, not memo_get: the build runs a distributed
-    # count() job, which must not execute while holding MEMO_LOCK
-    # (it would block every other memo user — dedup shingles, IVF
-    # centroids — for the job's duration; round-13 ADVICE). A raced
-    # duplicate count is deterministic, so first-store-wins is safe.
-    n = memo_get_heavy(
-        _copurchase_count_memo,
-        key,
-        lambda: _copurchase_weighted(spark, sf_dir).count(),
+    n = _COPURCHASE_COUNT.get_heavy(
+        spark, sf_dir, build=lambda: _copurchase_weighted(spark, sf_dir).count()
     )
     return n <= _BCAST_EDGE_GATE
 
@@ -226,7 +217,6 @@ def _copurchase_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_pagerank's edges: per-order distinct part arrays, ordered
     pairs exploded in-row, then one partial+final count on the pair
     key. Never a lineitem self-join."""
-    key = (spark.sparkContext.applicationId, sf_dir)
 
     def _build() -> DataFrame:
         order_parts = (
@@ -246,18 +236,7 @@ def _copurchase_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cache()
         )
 
-    return memo_get(_copurchase_memo, key, _build)
-
-
-def clear_graph_caches(sf_dir: str | None = None) -> None:
-    """Unpersist and drop the weighted-edge memo (and its edge-count
-    probe) — all entries, or one corpus dir's (see
-    llm.dedup.clear_dedup_caches for the rationale: session-lifetime
-    memos leak storage across corpus sweeps and serve stale relations
-    for rewritten dirs). Lock-guarded via the shared memo helpers;
-    stopped-session entries also prune on access."""
-    memo_clear(_copurchase_memo, sf_dir)
-    memo_clear(_copurchase_count_memo, sf_dir)
+    return _COPURCHASE.get(spark, sf_dir, build=_build)
 
 
 _SQL_COPURCHASE = """

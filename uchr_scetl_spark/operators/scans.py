@@ -23,6 +23,7 @@ from pyspark.sql.types import (
 
 from ..io import load, read_csv, read_json, scratch_dir, write_csv, write_json
 from ..exprs import dec_sum
+from ..memo import Memo
 from ..registry import query
 
 
@@ -312,14 +313,14 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_binary_fixture_memo: dict[tuple[str, str], str] = {}
+_BINARY_FIXTURE = Memo(evict=False)
 
 
 def _binary_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write the 32-doc .bin landing files once per (app, sf_dir);
     remove them at interpreter exit."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _binary_fixture_memo:
+
+    def _build() -> str:
         # zero-byte payloads are excluded ON BOTH SIDES: Spark's
         # binaryFile source silently SKIPS empty files (an empty-text
         # doc wrote a 0-byte .bin and vanished from the scan — found
@@ -340,8 +341,9 @@ def _binary_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
         for r in docs:
             with open(f"{out}/doc_{r.doc_id:05d}.bin", "wb") as fh:
                 fh.write(r.text.encode("utf-8"))
-        _binary_fixture_memo[key] = out
-    return _binary_fixture_memo[key]
+        return out
+
+    return _BINARY_FIXTURE.get_heavy(spark, sf_dir, build=_build)
 
 
 @query(
@@ -649,7 +651,7 @@ def sink_sorted_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_csv_malformed_memo: dict[tuple[str, str], str] = {}
+_CSV_MALFORMED = Memo(evict=False)
 
 
 def _csv_malformed_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -657,8 +659,8 @@ def _csv_malformed_dir(spark: SparkSession, sf_dir: str) -> str:
     remove it at interpreter exit — mirrors _binary_fixture_dir so
     bench sweeps don't leak one tempdir (plus a full customer CSV
     render) per invocation."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _csv_malformed_memo:
+
+    def _build() -> str:
         src = load(spark, sf_dir, "customer")
         line = F.when(
             F.col("c_custkey") % 50 == 0,
@@ -670,8 +672,9 @@ def _csv_malformed_dir(spark: SparkSession, sf_dir: str) -> str:
         )
         out = scratch_dir("uchr_csvmalformed_")
         src.select(line.alias("value")).write.mode("overwrite").text(out)
-        _csv_malformed_memo[key] = out
-    return _csv_malformed_memo[key]
+        return out
+
+    return _CSV_MALFORMED.get_heavy(spark, sf_dir, build=_build)
 
 
 @query(
@@ -720,7 +723,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_fixed_width_memo: dict[tuple[str, str], str] = {}
+_FIXED_WIDTH = Memo(evict=False)
 
 # (name, width) layout of the fixed-width landing file: key 12, balance
 # 14 (sign + 10.2), nation 4, segment 12 — classic mainframe-extract
@@ -737,8 +740,8 @@ def _fixed_width_dir(spark: SparkSession, sf_dir: str) -> str:
     """Render customer as a fixed-width text file once per
     (app, sf_dir): every field right-padded/left-padded into its
     column slot, one line per row, no delimiters."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _fixed_width_memo:
+
+    def _build() -> str:
         src = load(spark, sf_dir, "customer")
         # NULL fields render as all-space slots (concat null-propagates
         # and the text writer rejects NULL rows — a null-heavy feed
@@ -769,8 +772,9 @@ def _fixed_width_dir(spark: SparkSession, sf_dir: str) -> str:
         )
         out = scratch_dir("uchr_fixedwidth_")
         src.select(line.alias("value")).write.mode("overwrite").text(out)
-        _fixed_width_memo[key] = out
-    return _fixed_width_memo[key]
+        return out
+
+    return _FIXED_WIDTH.get_heavy(spark, sf_dir, build=_build)
 
 
 @query(

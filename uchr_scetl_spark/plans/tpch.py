@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..exprs import CHARGE, REVENUE, dec_avg, dec_sum, revenue_col, sql_dec_avg, sql_dec_sum
 from ..io import load
-from ..memo import memo_clear, memo_get
+from ..memo import Memo
 from ..registry import query
 
 
@@ -830,26 +830,16 @@ _PARTSUPP_SQL = """
 
 
 # One derived-partsupp relation per (app, sf_dir), cached and shared
-# by Q2/Q9/Q11/Q16/Q20 — the same memo pattern and lifetime as the
-# dedup shingle cache (evicted via clear_tpch_caches/clear_caches).
-# Round 15: the derivation is a full lineitem scan plus a
-# (part, supplier) DISTINCT shuffle, and the five consumers each
-# rebuilt it from scratch; memoizing the cached relation makes the
+# by Q2/Q9/Q11/Q16/Q20. Round 15: the derivation is a full lineitem
+# scan plus a (part, supplier) DISTINCT shuffle, and the five consumers
+# each rebuilt it from scratch; memoizing the cached relation makes the
 # scan+distinct a once-per-corpus cost, exactly how a production
 # pipeline would materialize a derived dimension once rather than
 # re-deriving it inside every consumer (A/B in OPTIMIZATION_r15.md).
-_partsupp_memo: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_tpch_caches(sf_dir: str | None = None) -> None:
-    """Unpersist and drop the derived-partsupp memo — all entries, or
-    one corpus dir's (see llm.dedup.clear_dedup_caches)."""
-    memo_clear(_partsupp_memo, sf_dir)
+_PARTSUPP = Memo()
 
 
 def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-
     def _build() -> DataFrame:
         li = (
             load(spark, sf_dir, "lineitem")
@@ -869,7 +859,7 @@ def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("ps_availqty"),
         ).cache()
 
-    return memo_get(_partsupp_memo, key, _build)
+    return _PARTSUPP.get(spark, sf_dir, build=_build)
 
 
 @query(

@@ -10,6 +10,8 @@ StructTypes are the single source of truth.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -109,3 +111,7 @@ EVENTS_RAW: StructType = _st(
 )
 
 TABLES: tuple[str, ...] = tuple(LOGICAL)
+
+
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")

@@ -23,9 +23,10 @@ Config rationale (SURVEY.md §4.2):
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import SparkSession
+
+from .memo import Memo
 
 # Confs that are safe to (re-)apply at runtime on someone else's session.
 _RUNTIME_CONFS: dict[str, str] = {
@@ -65,15 +66,14 @@ def configure(spark: SparkSession) -> SparkSession:
 
 
 # Child sessions created by conf_isolated_session, one per
-# (applicationId, purpose, confs, carried parent confs); pruned when
-# the owning app changes. Conf values are part of the key (round 15,
-# r14 ADVICE): a purpose string reused with DIFFERENT confs, or a
-# parent whose carried runtime confs changed since the first call,
-# mints a fresh child instead of silently serving the first caller's
-# conf set. The map stays small — keys are the engine's fixed purpose
-# strings crossed with the few conf sets the app actually uses.
-_CHILD_SESSIONS: dict[tuple, SparkSession] = {}
-_CHILD_LOCK = threading.Lock()
+# (applicationId, purpose, confs, carried parent confs). Conf values
+# are part of the key (round 15, r14 ADVICE): a purpose string reused
+# with DIFFERENT confs, or a parent whose carried runtime confs changed
+# since the first call, mints a fresh child instead of silently serving
+# the first caller's conf set. The memo stays small — keys are the
+# engine's fixed purpose strings crossed with the few conf sets the app
+# actually uses.
+_CHILDREN = Memo(evict=False)
 
 # Parent RUNTIME confs a child must inherit: SparkSession.newSession()
 # starts from the builder-time initial options (so every sweep-harness
@@ -126,26 +126,20 @@ def conf_isolated_session(
             v = None
         if v is not None:
             carried.append((k, v))
-    key = (
-        spark.sparkContext.applicationId,
-        purpose,
-        tuple(sorted(confs.items())),
-        tuple(carried),
+
+    def _build() -> SparkSession:
+        child = spark.newSession()
+        configure(child)
+        for k, v in carried:
+            child.conf.set(k, v)
+        for k, v in confs.items():
+            child.conf.set(k, v)
+        return child
+
+    return _CHILDREN.get(
+        spark, None, purpose, tuple(sorted(confs.items())), tuple(carried),
+        build=_build,
     )
-    with _CHILD_LOCK:
-        for k in list(_CHILD_SESSIONS):
-            if k[0] != key[0]:
-                del _CHILD_SESSIONS[k]
-        child = _CHILD_SESSIONS.get(key)
-        if child is None:
-            child = spark.newSession()
-            configure(child)
-            for k, v in carried:
-                child.conf.set(k, v)
-            for k, v in confs.items():
-                child.conf.set(k, v)
-            _CHILD_SESSIONS[key] = child
-    return child
 
 
 # Measured driver-heap sizing rule (round 14, BASELINE.md

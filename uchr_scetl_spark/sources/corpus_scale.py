@@ -7,7 +7,7 @@ plan audits argue rather than measure. This module synthesises larger
 corpora (3x, 10x, ...) from the sf0.1 seed so `tools/scale_growth.py`
 can fit per-key wall-time-vs-rows exponents on real runs.
 
-Why not the `tools/scaling_probe.py` twin replication? Shift-replicated
+Why not twin replication (the old scaling probe)? Shift-replicated
 documents are EXACT twins of their originals, so every pair-emitting
 dedup key's true output grows quadratically in the factor — the probe
 then measures result growth, not algorithmic growth, for precisely the

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..exprs import dec_sum, sql_dec_sum
 from ..io import load
+from ..memo import Memo
 from ..registry import query
 
 
@@ -327,7 +328,7 @@ def stream_locf_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_exactly_once_memo: dict[tuple[str, str], str] = {}
+_EXACTLY_ONCE = Memo(evict=False)
 
 
 def _exactly_once_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -339,8 +340,7 @@ def _exactly_once_dir(spark: SparkSession, sf_dir: str) -> str:
     from ..io import scratch_dir
     from .streams import idempotent_batch_sink
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _exactly_once_memo:
+    def _build() -> str:
         out = scratch_dir("uchr_exactly_once_")
         sink = idempotent_batch_sink(out)
         e = load(spark, sf_dir, "events").select(
@@ -356,8 +356,9 @@ def _exactly_once_dir(spark: SparkSession, sf_dir: str) -> str:
         sink(b0, 0)
         sink(b0, 0)  # redelivered batch — must be a no-op
         sink(b1, 1)
-        _exactly_once_memo[key] = out
-    return _exactly_once_memo[key]
+        return out
+
+    return _EXACTLY_ONCE.get_heavy(spark, sf_dir, build=_build)
 
 
 @query(
