@@ -1,67 +1,77 @@
-"""Self-oracle comparison helpers mirroring the driver's gate
-(__spark_entry__.py docstring): row count + column names +
-order-insensitive values, DuckDB as the reference engine."""
+"""Oracle helpers for the tests.
+
+The comparator is ``tools/selfcheck.py``'s, the one implementation of
+the driver's gate (__spark_entry__.py docstring): row count + column
+names + order-insensitive values, DuckDB as the reference engine. This
+module adds the hostile-corpus factory and the per-key oracle
+assertion every corpus gate shares."""
 
 from __future__ import annotations
 
-import duckdb
-import numpy as np
-import pandas as pd
+import contextlib
+import shutil
+import tempfile
 
+import pytest
+
+from tools.selfcheck import compare, oracle_connection
+from uchr_scetl_spark import clear_caches, load_registry
 from uchr_scetl_spark.schemas import TABLES
 
+from .conftest import SF_SMOKE
 
-def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
+REGISTRY = load_registry()
 
 
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        s = df[c]
-        if pd.api.types.is_datetime64_any_dtype(s):
-            ser = pd.to_datetime(s)
-            if getattr(ser.dt, "tz", None) is not None:
-                ser = ser.dt.tz_convert("UTC").dt.tz_localize(None)
-            df[c] = ser.astype("datetime64[us]")
-    # Driver-parity sort: column-wise sort_values, not row-stringify —
-    # must die on driver-unsortable (array) cells exactly like the
-    # driver's canonicalizer does (round-9 dedup_vec_ids lesson).
-    if len(df.columns) and len(df):
-        df = df.sort_values(by=list(df.columns), kind="stable")
-    return df.reset_index(drop=True)
+@contextlib.contextmanager
+def copied_corpus(prefix: str):
+    """A temp dir holding a copy of every SF_SMOKE table. On exit its
+    memo entries are evicted and the dir is removed."""
+    out = tempfile.mkdtemp(prefix=prefix)
+    try:
+        for t in TABLES:
+            shutil.copyfile(f"{SF_SMOKE}/{t}.parquet", f"{out}/{t}.parquet")
+        yield out
+    finally:
+        clear_caches(out)
+        shutil.rmtree(out, ignore_errors=True)
 
 
-def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
-    problems: list[str] = []
-    if len(sdf) != len(odf):
-        problems.append(f"rowcount spark={len(sdf)} oracle={len(odf)}")
-    if sorted(sdf.columns) != sorted(odf.columns):
-        problems.append(
-            f"columns spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}"
-        )
-    if problems:
-        return problems
-    a, b = _canon(sdf), _canon(odf)
-    for c in a.columns:
-        av, bv = a[c], b[c]
-        if pd.api.types.is_float_dtype(av) and pd.api.types.is_float_dtype(bv):
-            if not np.array_equal(
-                av.to_numpy(float), bv.to_numpy(float), equal_nan=True
-            ):
-                problems.append(f"col {c}: float mismatch")
-        else:
-            try:
-                eq = (
-                    av.astype(str).fillna("<null>") == bv.astype(str).fillna("<null>")
-                ).all()
-            except Exception:
-                eq = list(av) == list(bv)
-            if not eq:
-                problems.append(f"col {c}: value mismatch")
-    return problems
+def rewrite_tables(sf_dir: str, rewrites: dict[str, str]) -> None:
+    """Write each ``{table: select_sql}`` entry to ``sf_dir`` with one
+    DuckDB ``COPY``, a single parquet FILE per table (the testdata
+    layout io.load and the oracle both expect). The SQL reads the clean
+    SF_SMOKE tables as views named after them, so a rewrite is
+    ``SELECT * REPLACE (...) FROM documents``."""
+    with oracle_connection(SF_SMOKE) as con:
+        for t, sql in rewrites.items():
+            con.execute(f"COPY ({sql}) TO '{sf_dir}/{t}.parquet' (FORMAT PARQUET)")
+
+
+def mutated_corpus(prefix: str, rewrites: dict[str, str], scope: str = "module"):
+    """A fixture yielding a copy of SF_SMOKE with ``rewrites`` applied
+    (see ``rewrite_tables``); bind it to a module-level name."""
+
+    @pytest.fixture(scope=scope)
+    def corpus():
+        with copied_corpus(prefix) as out:
+            rewrite_tables(out, rewrites)
+            yield out
+
+    return corpus
+
+
+def assert_matches_oracle(spark, key: str, sf_dir: str, con=None):
+    """Run ``key`` on Spark and its oracle SQL on DuckDB over ``sf_dir``
+    (on ``con`` if given) and assert ``compare`` finds no problems.
+    Returns the Spark result as pandas."""
+    spec = REGISTRY[key]
+    sdf = spec.fn(spark, sf_dir).toPandas()
+    if con is None:
+        with oracle_connection(sf_dir) as own:
+            odf = own.sql(spec.oracle).df()
+    else:
+        odf = con.sql(spec.oracle).df()
+    problems = compare(sdf, odf)
+    assert not problems, f"{key}: {'; '.join(problems)}"
+    return sdf

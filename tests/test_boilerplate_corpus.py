@@ -31,28 +31,17 @@ the oracle SQL via sql_df_cap_qualify).
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from uchr_scetl_spark import clear_caches, load_registry
 from uchr_scetl_spark.llm.dedup import (
     CONTAINMENT_DF_CAP,
     cap_hot_postings,
     shingled_docs,
 )
 
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-REGISTRY = load_registry()
+from .oracle import REGISTRY, assert_matches_oracle, copied_corpus
 
 BOILER = "terms of service apply all rights reserved contact"  # 8 tokens
 N_BELOW = 600   # boilerplate df stays under CONTAINMENT_DF_CAP=1000
@@ -76,38 +65,27 @@ def _docs(n_boiler: int) -> list[tuple]:
     return rows
 
 
-def _corpus(n_boiler: int) -> str:
-    import duckdb
+def _boiler_corpus(n_boiler: int):
+    """A fixture: SF_SMOKE with documents replaced by ``_docs(n_boiler)``."""
 
-    out = tempfile.mkdtemp(prefix=f"uchr_boiler_{n_boiler}_")
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE d (doc_id BIGINT, text VARCHAR, lang VARCHAR,"
-        " source VARCHAR, n_chars BIGINT)"
-    )
-    con.executemany("INSERT INTO d VALUES (?,?,?,?,?)", _docs(n_boiler))
-    con.execute(f"COPY d TO '{out}/documents.parquet' (FORMAT PARQUET)")
-    con.close()
-    for t in TABLES:
-        if t != "documents":
-            shutil.copyfile(f"{SF_SMOKE}/{t}.parquet", f"{out}/{t}.parquet")
-    return out
+    @pytest.fixture(scope="module")
+    def corpus():
+        with copied_corpus(f"uchr_boiler_{n_boiler}_") as out:
+            con = duckdb.connect()
+            con.execute(
+                "CREATE TABLE d (doc_id BIGINT, text VARCHAR, lang VARCHAR,"
+                " source VARCHAR, n_chars BIGINT)"
+            )
+            con.executemany("INSERT INTO d VALUES (?,?,?,?,?)", _docs(n_boiler))
+            con.execute(f"COPY d TO '{out}/documents.parquet' (FORMAT PARQUET)")
+            con.close()
+            yield out
 
-
-@pytest.fixture(scope="module")
-def below_cap_dir():
-    out = _corpus(N_BELOW)
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    return corpus
 
 
-@pytest.fixture(scope="module")
-def above_cap_dir():
-    out = _corpus(N_ABOVE)
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+below_cap_dir = _boiler_corpus(N_BELOW)
+above_cap_dir = _boiler_corpus(N_ABOVE)
 
 
 def _candidate_pairs(spark, sf_dir: str, cap: int | None) -> int:
@@ -178,12 +156,4 @@ def test_containment_value_matches_oracle_across_the_cap(
     which, spark, below_cap_dir, above_cap_dir
 ):
     d = below_cap_dir if which == "below" else above_cap_dir
-    con = oracle_connection(d)
-    try:
-        spec = REGISTRY["dedup_containment"]
-        sdf = spec.fn(spark, d).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"dedup_containment[{which}]: {problems}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, "dedup_containment", d)

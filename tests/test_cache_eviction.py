@@ -7,24 +7,23 @@ would otherwise be served results of the old data forever)."""
 
 from __future__ import annotations
 
-import shutil
 import sys
-import tempfile
 import threading
 
-import duckdb
-import pytest
-
-from uchr_scetl_spark import clear_caches, load_registry
+from uchr_scetl_spark import clear_caches
 from uchr_scetl_spark.memo import MEMO_LOCK, MEMOS, Memo
 from uchr_scetl_spark.operators import scans
 from uchr_scetl_spark.plans import tpch
-from uchr_scetl_spark.schemas import TABLES
 
 from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-REGISTRY = load_registry()
+from .oracle import (
+    REGISTRY,
+    assert_matches_oracle,
+    compare,
+    mutated_corpus,
+    oracle_connection,
+    rewrite_tables,
+)
 
 # keys served from an evict=False scratch-output memo
 SCRATCH_KEYS = [
@@ -38,14 +37,7 @@ SCRATCH_KEYS = [
 REWRITTEN = {"orders": "o_orderkey", "customer": "c_custkey", "events": "event_id"}
 
 
-@pytest.fixture()
-def mutable_corpus(spark):
-    out = tempfile.mkdtemp(prefix="uchr_mutable_corpus_")
-    for t in TABLES:
-        shutil.copyfile(f"{SF_SMOKE}/{t}.parquet", f"{out}/{t}.parquet")
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+mutable_corpus = mutated_corpus("uchr_mutable_corpus_", {}, scope="function")
 
 
 def _memo_entries(sf_dir: str) -> int:
@@ -68,33 +60,16 @@ def test_clear_caches_scoped_to_dir(spark, mutable_corpus):
     assert len(scans._CSV_MALFORMED.values(mutable_corpus)) == 1
 
 
-def _rewrite(sf_dir: str, selects: dict[str, str]) -> None:
-    """Rewrite tables in place: each maps to a SELECT over ``src``, its
-    smoke-corpus original."""
-    con = duckdb.connect()
-    for t, sql in selects.items():
-        con.execute(
-            "CREATE OR REPLACE VIEW src AS"
-            f" SELECT * FROM read_parquet('{SF_SMOKE}/{t}.parquet')"
-        )
-        con.execute(f"COPY ({sql}) TO '{sf_dir}/{t}.parquet' (FORMAT PARQUET)")
-    con.close()
-
-
 def _keep_multiples(mod: int) -> dict[str, str]:
-    return {t: f"SELECT * FROM src WHERE {k} % {mod} = 0" for t, k in REWRITTEN.items()}
+    return {t: f"SELECT * FROM {t} WHERE {k} % {mod} = 0" for t, k in REWRITTEN.items()}
 
 
 def _assert_scratch_keys_match_oracle(spark, sf_dir: str, stale: dict) -> None:
-    con = oracle_connection(sf_dir)
-    try:
+    with oracle_connection(sf_dir) as con:
         for key in SCRATCH_KEYS:
             odf = con.sql(REGISTRY[key].oracle).df()
             assert compare(stale[key], odf), f"{key}: rewrite left the oracle unchanged"
-            problems = compare(REGISTRY[key].fn(spark, sf_dir).toPandas(), odf)
-            assert not problems, f"{key}: {'; '.join(problems)}"
-    finally:
-        con.close()
+            assert_matches_oracle(spark, key, sf_dir, con)
 
 
 def test_rewritten_corpus_reread_after_clear(spark, mutable_corpus):
@@ -107,9 +82,9 @@ def test_rewritten_corpus_reread_after_clear(spark, mutable_corpus):
     # and keep every other orders/customer/events row
     unique_docs = (
         "SELECT * REPLACE ('unique document number ' || doc_id AS text)"
-        " FROM src ORDER BY doc_id LIMIT 4"
+        " FROM documents ORDER BY doc_id LIMIT 4"
     )
-    _rewrite(mutable_corpus, {"documents": unique_docs, **_keep_multiples(2)})
+    rewrite_tables(mutable_corpus, {"documents": unique_docs, **_keep_multiples(2)})
 
     # no clear_caches: the changed corpus fingerprint alone must retire
     # the memoized pair relation (which still holds the old corpus's
@@ -125,7 +100,7 @@ def test_rewritten_corpus_reread_after_clear(spark, mutable_corpus):
 
     # rewrite again, then clear_caches: same answers from a stale state
     stale = {k: REGISTRY[k].fn(spark, mutable_corpus).toPandas() for k in SCRATCH_KEYS}
-    _rewrite(mutable_corpus, _keep_multiples(3))
+    rewrite_tables(mutable_corpus, _keep_multiples(3))
     clear_caches(mutable_corpus)
     _assert_scratch_keys_match_oracle(spark, mutable_corpus, stale)
 

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -297,3 +299,84 @@ def test_operators_catalog_is_current():
     for k, spec in reg.items():
         want = "rows-only" if spec.rows_only else "hash"
         assert rows[k] == want, f"{k}: catalog says {rows[k]}, registry says {want}"
+
+
+# Oracle keys whose Python-worker code lives in the package: pandas
+# UDFs, UDAFs, cogrouped applyInPandas and the multimodal decoders.
+PYTHON_WORKER_KEYS = [
+    "multimodal_binary",
+    "multimodal_frame_sample",
+    "multimodal_resize",
+    "udaf_grouped",
+    "udf_cogrouped_pandas",
+]
+
+_FOREIGN_CWD_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from tests.oracle import assert_matches_oracle
+from uchr_scetl_spark import get_session
+
+spark = get_session("uchr-foreign-cwd")
+for key in {keys!r}:
+    assert_matches_oracle(spark, key, {sf!r})
+spark.stop()
+"""
+
+
+def test_python_worker_keys_run_from_a_foreign_cwd(tmp_path):
+    """The engine must not rely on being launched from the repo root:
+    on a cluster the Python workers cannot import the package from the
+    driver's cwd. A fresh driver process whose cwd is a temp dir and
+    whose PYTHONPATH is unset runs every key with package-defined
+    worker code; ``configure`` ships the package to the workers by
+    value, so none of them dies with ModuleNotFoundError."""
+    from .conftest import SF_SMOKE
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "2g"  # a second JVM beside the suite's
+    script = _FOREIGN_CWD_SCRIPT.format(
+        repo=repo, keys=PYTHON_WORKER_KEYS, sf=SF_SMOKE
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+def test_corpus_harnesses_are_shared():
+    """Hostile corpora come from tests/oracle.py (``mutated_corpus``,
+    ``copied_corpus``) and the comparator from tools/selfcheck.py. No
+    file under tests/ may paste the table list, copy SF_SMOKE tables by
+    hand (oracle.py's ``copied_corpus`` is the one copy), or define its
+    own ``compare``/``oracle_connection`` — the pattern that once grew
+    to 25 hand-copied harnesses whose comparators drifted apart."""
+    import glob
+    import re
+
+    rules = [
+        ("pasted table list", r"^TABLES = \[", None),
+        (
+            "hand copy of an SF_SMOKE table",
+            r'copy\w*\(\s*f"\{SF_SMOKE\}/|= f"\{SF_SMOKE\}/\{t\}\.parquet"',
+            "oracle.py",
+        ),
+        ("own comparator", r"^\s*def (compare|oracle_connection)\(", None),
+    ]
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(os.path.dirname(__file__), "*.py"))):
+        name = os.path.basename(path)
+        with open(path) as f:
+            src = f.read()
+        offenders += [
+            f"{name}: {what}"
+            for what, rx, home in rules
+            if name != home and re.search(rx, src, re.M)
+        ]
+    assert not offenders, "\n".join(offenders)

@@ -34,20 +34,11 @@ Full registry on this corpus: 303 pass / 0 fail / 3 rows-only.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
+from uchr_scetl_spark import clear_caches
 
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import assert_matches_oracle, mutated_corpus, oracle_connection
 
 # the two sweep divergences (fixed) + the heaviest text consumers of
 # raw bytes, pinned exact on the hostile corpus
@@ -63,8 +54,6 @@ GATE_KEYS = [
     "dedup_ngram_jaccard",
 ]
 
-REGISTRY = load_registry()
-
 _TEXT_CASE = """
 CASE doc_id % 31
   WHEN 0 THEN 'nul' || chr(0) || 'inside ' || text
@@ -78,31 +67,16 @@ CASE doc_id % 31
 END"""
 
 
-@pytest.fixture(scope="module")
-def ctrl_chars_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_ctrl_chars_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "documents":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT doc_id, {_TEXT_CASE} AS text, lang, source,
-                         CAST(length({_TEXT_CASE}) AS BIGINT) AS n_chars
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+ctrl_chars_dir = mutated_corpus(
+    "uchr_ctrl_chars_corpus_",
+    {
+        "documents": f"""
+            SELECT doc_id, {_TEXT_CASE} AS text, lang, source,
+                   CAST(length({_TEXT_CASE}) AS BIGINT) AS n_chars
+            FROM documents
+        """,
+    },
+)
 
 
 def test_corpus_carries_control_bytes(ctrl_chars_dir):
@@ -124,16 +98,7 @@ def test_corpus_carries_control_bytes(ctrl_chars_dir):
 @pytest.mark.parametrize("key", GATE_KEYS)
 def test_text_key_is_exact_on_control_chars(key, spark, ctrl_chars_dir):
     clear_caches(ctrl_chars_dir)
-    con = oracle_connection(ctrl_chars_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, ctrl_chars_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-        assert len(sdf) > 0
-    finally:
-        con.close()
+    assert len(assert_matches_oracle(spark, key, ctrl_chars_dir)) > 0
 
 
 def test_dot_regex_wraps_line_terminators(spark):

@@ -19,82 +19,41 @@ way real ingest does, keep the rest of the corpus intact.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
+from .oracle import REGISTRY, assert_matches_oracle, mutated_corpus
 
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-REGISTRY = load_registry()
-
-
-@pytest.fixture(scope="module")
-def corrupted_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_corrupted_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "orders":
-            # Deterministic, key-based corruption of ~1-in-N rows per
-            # violation class (disjoint moduli so classes don't shadow
-            # each other), plus a duplicated-orderkey block appended.
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN o_orderkey % 97 = 0 THEN NULL
-                         ELSE o_totalprice END AS o_totalprice)
-                  FROM (
-                    SELECT * REPLACE (
-                      CASE WHEN o_orderkey % 89 = 1 THEN -o_totalprice
-                           WHEN o_orderkey % 89 = 2 THEN 0
-                           ELSE o_totalprice END AS o_totalprice,
-                      CASE WHEN o_orderkey % 83 = 3 THEN 'X'
-                           ELSE o_orderstatus END AS o_orderstatus,
-                      CASE WHEN o_orderkey % 79 = 4 THEN -o_custkey
-                           ELSE o_custkey END AS o_custkey)
-                    FROM read_parquet('{src}')
-                  )
-                  UNION ALL
-                  SELECT * FROM read_parquet('{src}')
-                  WHERE o_orderkey % 101 = 5
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
+# Deterministic, key-based corruption of ~1-in-N rows per violation
+# class (disjoint moduli so classes don't shadow each other), plus a
+# duplicated-orderkey block appended.
+corrupted_dir = mutated_corpus(
+    "uchr_corrupted_corpus_",
+    {
+        "orders": """
+            SELECT * REPLACE (
+              CASE WHEN o_orderkey % 97 = 0 THEN NULL
+                   ELSE o_totalprice END AS o_totalprice)
+            FROM (
+              SELECT * REPLACE (
+                CASE WHEN o_orderkey % 89 = 1 THEN -o_totalprice
+                     WHEN o_orderkey % 89 = 2 THEN 0
+                     ELSE o_totalprice END AS o_totalprice,
+                CASE WHEN o_orderkey % 83 = 3 THEN 'X'
+                     ELSE o_orderstatus END AS o_orderstatus,
+                CASE WHEN o_orderkey % 79 = 4 THEN -o_custkey
+                     ELSE o_custkey END AS o_custkey)
+              FROM orders
             )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+            UNION ALL
+            SELECT * FROM orders
+            WHERE o_orderkey % 101 = 5
+        """,
+    },
+)
 
 
-@pytest.fixture(scope="module")
-def corrupted_oracle(corrupted_dir):
-    con = oracle_connection(corrupted_dir)
-    yield con
-    con.close()
-
-
-def test_dq_audit_counters_all_fire_and_match(spark, corrupted_dir, corrupted_oracle):
-    spec = REGISTRY["etl_dq_audit"]
-    sdf = spec.fn(spark, corrupted_dir).toPandas()
-    odf = corrupted_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"etl_dq_audit: {'; '.join(problems)}"
-    row = sdf.iloc[0]
+def test_dq_audit_counters_all_fire_and_match(spark, corrupted_dir):
+    row = assert_matches_oracle(spark, "etl_dq_audit", corrupted_dir).iloc[0]
     for counter in (
         "null_price", "nonpositive_price", "bad_status",
         "orphan_custkey", "dup_orderkey",
@@ -125,25 +84,15 @@ def test_dq_audit_counters_all_fire_and_match(spark, corrupted_dir, corrupted_or
         "etl_publish_checksums",
     ],
 )
-def test_orders_keys_survive_corruption(key, spark, corrupted_dir, corrupted_oracle):
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, corrupted_dir).toPandas()
-    odf = corrupted_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+def test_orders_keys_survive_corruption(key, spark, corrupted_dir):
+    assert_matches_oracle(spark, key, corrupted_dir)
 
 
-def test_expectations_suite_fails_on_corruption_and_matches(
-    spark, corrupted_dir, corrupted_oracle
-):
+def test_expectations_suite_fails_on_corruption_and_matches(spark, corrupted_dir):
     """On the corrupted corpus the zero-tolerance expectations must
     flip to failed (their counters fire) while Spark and DuckDB still
     value-match — both verdict arms live, oracle-checked."""
-    spec = REGISTRY["etl_expectations_suite"]
-    sdf = spec.fn(spark, corrupted_dir).toPandas()
-    odf = corrupted_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"etl_expectations_suite: {'; '.join(problems)}"
+    sdf = assert_matches_oracle(spark, "etl_expectations_suite", corrupted_dir)
     by_id = {r.expectation_id: r for r in sdf.itertuples()}
     for eid in ("price_positive", "price_not_null", "status_in_domain",
                 "custkey_positive"):
@@ -168,34 +117,19 @@ POISON_ANCHOR = 0
 POISON_TWIN = 442  # == conv(md5('neg:0:1')[:8], 16, 10) % 500
 
 
-@pytest.fixture(scope="module")
-def poisoned_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_poisoned_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "documents":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN doc_id = {POISON_TWIN}
-                         THEN (SELECT text FROM read_parquet('{src}')
-                               WHERE doc_id = {POISON_ANCHOR})
-                         ELSE text END AS text)
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+poisoned_dir = mutated_corpus(
+    "uchr_poisoned_corpus_",
+    {
+        "documents": f"""
+            SELECT * REPLACE (
+              CASE WHEN doc_id = {POISON_TWIN}
+                   THEN (SELECT text FROM documents
+                         WHERE doc_id = {POISON_ANCHOR})
+                   ELSE text END AS text)
+            FROM documents
+        """,
+    },
+)
 
 
 def test_poisoned_negative_is_excluded_by_construction(spark, poisoned_dir):
@@ -237,15 +171,7 @@ def test_poisoned_negative_is_excluded_by_construction(spark, poisoned_dir):
 
 
 def test_poisoned_corpus_still_matches_oracle(spark, poisoned_dir):
-    con = oracle_connection(poisoned_dir)
-    try:
-        spec = REGISTRY["sample_contrastive_negatives"]
-        sdf = spec.fn(spark, poisoned_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"poisoned: {'; '.join(problems)}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, "sample_contrastive_negatives", poisoned_dir)
 
 
 def test_observe_metrics_counters_fire_on_corruption(spark, corrupted_dir):

@@ -37,17 +37,7 @@ import tempfile
 
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-REGISTRY = load_registry()
+from .oracle import assert_matches_oracle, mutated_corpus, oracle_connection
 
 GATE_KEYS = ["sink_csv_roundtrip_text", "scan_csv", "sink_csv"]
 
@@ -68,31 +58,16 @@ CASE doc_id % 19
 END"""
 
 
-@pytest.fixture(scope="module")
-def csv_hostile_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_csv_fidelity_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "documents":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT doc_id, {_TEXT_CASE} AS text, lang, source,
-                         CAST(length({_TEXT_CASE}) AS BIGINT) AS n_chars
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+csv_hostile_dir = mutated_corpus(
+    "uchr_csv_fidelity_corpus_",
+    {
+        "documents": f"""
+            SELECT doc_id, {_TEXT_CASE} AS text, lang, source,
+                   CAST(length({_TEXT_CASE}) AS BIGINT) AS n_chars
+            FROM documents
+        """,
+    },
+)
 
 
 def test_corpus_carries_csv_specials(csv_hostile_dir):
@@ -116,16 +91,7 @@ def test_corpus_carries_csv_specials(csv_hostile_dir):
 def test_csv_key_is_lossless_on_hostile_text(key, spark, csv_hostile_dir):
     """The round-trip keys must be bit-exact against the parquet
     source on every CSV-special shape — including NULL-vs-empty."""
-    con = oracle_connection(csv_hostile_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, csv_hostile_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-        assert len(sdf) > 0
-    finally:
-        con.close()
+    assert len(assert_matches_oracle(spark, key, csv_hostile_dir)) > 0
 
 
 def test_spark_written_csv_is_rfc4180_for_duckdb(spark, csv_hostile_dir):

@@ -101,20 +101,12 @@ The corpora are deterministic key-based rewrites of the smoke tables
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
+from uchr_scetl_spark import clear_caches
 
 from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import REGISTRY, assert_matches_oracle, mutated_corpus, oracle_connection
 
 EMPTY_EMB_KEYS = [
     "sim_label_centroids",
@@ -135,87 +127,41 @@ NULL_SOURCE_KEYS = [
     "dedup_exact",
 ]
 
-REGISTRY = load_registry()
 
-
-def _variant_dir(prefix: str, table: str, copy_sql: str):
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix=prefix)
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == table:
-            con.execute(copy_sql.format(src=src, dst=dst))
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    return out
-
-
-@pytest.fixture(scope="module")
-def empty_emb_dir():
-    out = _variant_dir(
-        "uchr_empty_emb_corpus_",
-        "embeddings",
-        """
-        COPY (
-          SELECT * REPLACE (
-            CASE WHEN vec_id % 11 = 0 THEN [] ELSE embedding END
-              AS embedding)
-          FROM read_parquet('{src}')
-        ) TO '{dst}' (FORMAT PARQUET)
+empty_emb_dir = mutated_corpus(
+    "uchr_empty_emb_corpus_",
+    {
+        "embeddings": """
+            SELECT * REPLACE (
+              CASE WHEN vec_id % 11 = 0 THEN [] ELSE embedding END
+                AS embedding)
+            FROM embeddings
         """,
-    )
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    },
+)
 
 
-@pytest.fixture(scope="module")
-def null_source_dir():
-    out = _variant_dir(
-        "uchr_null_source_corpus_",
-        "documents",
-        """
-        COPY (
-          SELECT * REPLACE (
-            CASE WHEN doc_id % 13 = 0 THEN NULL ELSE source END
-              AS source)
-          FROM read_parquet('{src}')
-        ) TO '{dst}' (FORMAT PARQUET)
+null_source_dir = mutated_corpus(
+    "uchr_null_source_corpus_",
+    {
+        "documents": """
+            SELECT * REPLACE (
+              CASE WHEN doc_id % 13 = 0 THEN NULL ELSE source END
+                AS source)
+            FROM documents
         """,
-    )
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    },
+)
 
 
 @pytest.mark.parametrize("key", EMPTY_EMB_KEYS)
 def test_key_matches_oracle_with_empty_embeddings(key, spark, empty_emb_dir):
-    con = oracle_connection(empty_emb_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, empty_emb_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, key, empty_emb_dir)
 
 
 @pytest.mark.parametrize("key", NULL_SOURCE_KEYS)
 def test_key_matches_oracle_with_null_sources(key, spark, null_source_dir):
-    con = oracle_connection(null_source_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, null_source_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, key, null_source_dir)
 
 
 def test_empty_embeddings_actually_present(spark, empty_emb_dir):
@@ -265,66 +211,38 @@ EMPTY_TEXT_KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def null_lang_dir():
-    out = _variant_dir(
-        "uchr_null_lang_corpus_",
-        "documents",
-        """
-        COPY (
-          SELECT * REPLACE (
-            CASE WHEN doc_id % 7 = 0 THEN NULL ELSE lang END AS lang)
-          FROM read_parquet('{src}')
-        ) TO '{dst}' (FORMAT PARQUET)
+null_lang_dir = mutated_corpus(
+    "uchr_null_lang_corpus_",
+    {
+        "documents": """
+            SELECT * REPLACE (
+              CASE WHEN doc_id % 7 = 0 THEN NULL ELSE lang END AS lang)
+            FROM documents
         """,
-    )
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    },
+)
 
 
-@pytest.fixture(scope="module")
-def empty_text_dir():
-    out = _variant_dir(
-        "uchr_empty_text_corpus_",
-        "documents",
-        """
-        COPY (
-          SELECT * REPLACE (
-            CASE WHEN doc_id % 9 = 0 THEN '' ELSE text END AS text)
-          FROM read_parquet('{src}')
-        ) TO '{dst}' (FORMAT PARQUET)
+empty_text_dir = mutated_corpus(
+    "uchr_empty_text_corpus_",
+    {
+        "documents": """
+            SELECT * REPLACE (
+              CASE WHEN doc_id % 9 = 0 THEN '' ELSE text END AS text)
+            FROM documents
         """,
-    )
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    },
+)
 
 
 @pytest.mark.parametrize("key", NULL_LANG_KEYS)
 def test_key_matches_oracle_with_null_lang(key, spark, null_lang_dir):
-    con = oracle_connection(null_lang_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, null_lang_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, key, null_lang_dir)
 
 
 @pytest.mark.parametrize("key", EMPTY_TEXT_KEYS)
 def test_key_matches_oracle_with_empty_text(key, spark, empty_text_dir):
-    con = oracle_connection(empty_text_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, empty_text_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, key, empty_text_dir)
 
 
 EXTREME_VALUE_KEYS = [
@@ -345,37 +263,23 @@ EXTREME_VALUE_KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def extreme_value_dir():
-    out = _variant_dir(
-        "uchr_extreme_value_corpus_",
-        "events",
-        """
-        COPY (
-          SELECT * REPLACE (
-            CASE WHEN event_id % 17 = 0 THEN -value * 1000
-                 WHEN event_id % 19 = 0 THEN value * 100000
-                 ELSE value END AS value)
-          FROM read_parquet('{src}')
-        ) TO '{dst}' (FORMAT PARQUET)
+extreme_value_dir = mutated_corpus(
+    "uchr_extreme_value_corpus_",
+    {
+        "events": """
+            SELECT * REPLACE (
+              CASE WHEN event_id % 17 = 0 THEN -value * 1000
+                   WHEN event_id % 19 = 0 THEN value * 100000
+                   ELSE value END AS value)
+            FROM events
         """,
-    )
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    },
+)
 
 
 @pytest.mark.parametrize("key", EXTREME_VALUE_KEYS)
 def test_key_matches_oracle_with_extreme_values(key, spark, extreme_value_dir):
-    con = oracle_connection(extreme_value_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, extreme_value_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, key, extreme_value_dir)
 
 
 HOSTILE_NAME_KEYS = [
@@ -391,39 +295,25 @@ HOSTILE_NAME_KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def hostile_name_dir():
-    out = _variant_dir(
-        "uchr_hostile_name_corpus_",
-        "customer",
-        """
-        COPY (
-          SELECT * REPLACE (
-            CASE WHEN c_custkey % 11 = 0
-                 THEN c_name || '|' || chr(92) || 'N'
-                 WHEN c_custkey % 13 = 0
-                 THEN chr(92) || c_name || '|x'
-                 ELSE c_name END AS c_name)
-          FROM read_parquet('{src}')
-        ) TO '{dst}' (FORMAT PARQUET)
+hostile_name_dir = mutated_corpus(
+    "uchr_hostile_name_corpus_",
+    {
+        "customer": """
+            SELECT * REPLACE (
+              CASE WHEN c_custkey % 11 = 0
+                   THEN c_name || '|' || chr(92) || 'N'
+                   WHEN c_custkey % 13 = 0
+                   THEN chr(92) || c_name || '|x'
+                   ELSE c_name END AS c_name)
+            FROM customer
         """,
-    )
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    },
+)
 
 
 @pytest.mark.parametrize("key", HOSTILE_NAME_KEYS)
 def test_key_matches_oracle_with_hostile_names(key, spark, hostile_name_dir):
-    con = oracle_connection(hostile_name_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, hostile_name_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, key, hostile_name_dir)
 
 
 def test_checksum_differs_from_clean_corpus(spark, hostile_name_dir):
@@ -460,57 +350,37 @@ EXTREME_TS_KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def extreme_ts_dir():
-    out = _variant_dir(
-        "uchr_extreme_ts_corpus_",
-        "events",
-        """
-        COPY (
-          SELECT * REPLACE (
-            CASE WHEN event_id % 11 = 0 THEN ts - INTERVAL 80 YEAR
-                 WHEN event_id % 13 = 0 THEN ts + INTERVAL 150 YEAR
-                 ELSE ts END AS ts)
-          FROM read_parquet('{src}')
-        ) TO '{dst}' (FORMAT PARQUET)
+extreme_ts_dir = mutated_corpus(
+    "uchr_extreme_ts_corpus_",
+    {
+        "events": """
+            SELECT * REPLACE (
+              CASE WHEN event_id % 11 = 0 THEN ts - INTERVAL 80 YEAR
+                   WHEN event_id % 13 = 0 THEN ts + INTERVAL 150 YEAR
+                   ELSE ts END AS ts)
+            FROM events
         """,
-    )
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    },
+)
 
 
 @pytest.mark.parametrize("key", EXTREME_TS_KEYS)
 def test_key_matches_oracle_with_extreme_timestamps(key, spark, extreme_ts_dir):
-    con = oracle_connection(extreme_ts_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, extreme_ts_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, key, extreme_ts_dir)
 
 
-@pytest.fixture(scope="module")
-def nan_value_dir():
-    out = _variant_dir(
-        "uchr_nan_value_corpus_",
-        "events",
-        """
-        COPY (
-          SELECT * REPLACE (
-            CASE WHEN event_id % 31 = 0 THEN CAST('nan' AS DOUBLE)
-                 WHEN event_id % 37 = 0 THEN CAST('inf' AS DOUBLE)
-                 ELSE value END AS value)
-          FROM read_parquet('{src}')
-        ) TO '{dst}' (FORMAT PARQUET)
+nan_value_dir = mutated_corpus(
+    "uchr_nan_value_corpus_",
+    {
+        "events": """
+            SELECT * REPLACE (
+              CASE WHEN event_id % 31 = 0 THEN CAST('nan' AS DOUBLE)
+                   WHEN event_id % 37 = 0 THEN CAST('inf' AS DOUBLE)
+                   ELSE value END AS value)
+            FROM events
         """,
-    )
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    },
+)
 
 
 @pytest.mark.parametrize(
@@ -549,74 +419,49 @@ NEGATIVE_KEY_KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def negative_key_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_negative_key_corpus_")
-    reps = {
-        "orders": (
-            "CASE WHEN o_orderkey % 2 = 1 THEN -o_orderkey "
-            "ELSE o_orderkey END AS o_orderkey"
-        ),
-        "lineitem": (
-            "CASE WHEN l_orderkey % 2 = 1 THEN -l_orderkey "
-            "ELSE l_orderkey END AS l_orderkey"
-        ),
-        "events": (
-            "CASE WHEN event_id % 2 = 1 THEN -event_id "
-            "ELSE event_id END AS event_id"
-        ),
-    }
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t in reps:
-            con.execute(
-                f"COPY (SELECT * REPLACE ({reps[t]}) "
-                f"FROM read_parquet('{src}')) TO '{dst}' (FORMAT PARQUET)"
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+negative_key_dir = mutated_corpus(
+    "uchr_negative_key_corpus_",
+    {
+        "orders": """
+            SELECT * REPLACE (
+              CASE WHEN o_orderkey % 2 = 1 THEN -o_orderkey
+                   ELSE o_orderkey END AS o_orderkey)
+            FROM orders
+        """,
+        "lineitem": """
+            SELECT * REPLACE (
+              CASE WHEN l_orderkey % 2 = 1 THEN -l_orderkey
+                   ELSE l_orderkey END AS l_orderkey)
+            FROM lineitem
+        """,
+        "events": """
+            SELECT * REPLACE (
+              CASE WHEN event_id % 2 = 1 THEN -event_id
+                   ELSE event_id END AS event_id)
+            FROM events
+        """,
+    },
+)
 
 
 @pytest.mark.parametrize("key", NEGATIVE_KEY_KEYS)
 def test_key_matches_oracle_with_negative_keys(key, spark, negative_key_dir):
-    con = oracle_connection(negative_key_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, negative_key_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, key, negative_key_dir)
 
 
-@pytest.fixture(scope="module")
-def extreme_emb_value_dir():
-    out = _variant_dir(
-        "uchr_extreme_emb_value_corpus_",
-        "embeddings",
-        """
-        COPY (
-          SELECT * REPLACE (
-            CASE WHEN vec_id % 13 = 0
-                 THEN list_transform(embedding,
-                        x -> CAST(x * 10000000.0 AS FLOAT))
-                 ELSE embedding END AS embedding)
-          FROM read_parquet('{src}')
-        ) TO '{dst}' (FORMAT PARQUET)
+extreme_emb_value_dir = mutated_corpus(
+    "uchr_extreme_emb_value_corpus_",
+    {
+        "embeddings": """
+            SELECT * REPLACE (
+              CASE WHEN vec_id % 13 = 0
+                   THEN list_transform(embedding,
+                          x -> CAST(x * 10000000.0 AS FLOAT))
+                   ELSE embedding END AS embedding)
+            FROM embeddings
         """,
-    )
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    },
+)
 
 
 @pytest.mark.parametrize(
@@ -645,25 +490,19 @@ def test_extreme_embedding_magnitudes_fail_loudly(
         REGISTRY[key].fn(spark, extreme_emb_value_dir).toPandas()
 
 
-@pytest.fixture(scope="module")
-def null_element_emb_dir():
-    out = _variant_dir(
-        "uchr_null_elem_emb_corpus_",
-        "embeddings",
-        """
-        COPY (
-          SELECT * REPLACE (
-            CASE WHEN vec_id % 37 = 0
-                 THEN list_append(embedding[:len(embedding)-1],
-                                  CAST(NULL AS FLOAT))
-                 ELSE embedding END AS embedding)
-          FROM read_parquet('{src}')
-        ) TO '{dst}' (FORMAT PARQUET)
+null_element_emb_dir = mutated_corpus(
+    "uchr_null_elem_emb_corpus_",
+    {
+        "embeddings": """
+            SELECT * REPLACE (
+              CASE WHEN vec_id % 37 = 0
+                   THEN list_append(embedding[:len(embedding)-1],
+                                    CAST(NULL AS FLOAT))
+                   ELSE embedding END AS embedding)
+            FROM embeddings
         """,
-    )
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    },
+)
 
 
 def test_null_embedding_components_fail_loudly_in_vec_dedup(
@@ -679,12 +518,9 @@ def test_null_embedding_components_fail_loudly_in_vec_dedup(
     divergence."""
     with pytest.raises(Exception, match="NULL embedding component"):
         REGISTRY["dedup_vec_ids"].fn(spark, null_element_emb_dir).toPandas()
-    con = oracle_connection(null_element_emb_dir)
-    try:
+    with oracle_connection(null_element_emb_dir) as con:
         with pytest.raises(Exception, match="NULL embedding component"):
             con.sql(REGISTRY["dedup_vec_ids"].oracle).df()
-    finally:
-        con.close()
 
 
 def test_malformed_price_tokens_quarantine_not_throw(spark):

@@ -31,20 +31,18 @@ proves the documented two-step pipeline end-to-end:
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import (
+    REGISTRY,
+    assert_matches_oracle,
+    compare,
+    copied_corpus,
+    mutated_corpus,
+    oracle_connection,
+)
 
 # the nine keys the raw dup-id corpus split, re-checked on the
 # deduped output
@@ -60,74 +58,45 @@ DIVERGED_KEYS = [
     "text_pack_sequences",
 ]
 
-REGISTRY = load_registry()
 
-
-def _build_dup_doc_corpus(out: str) -> None:
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "documents":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * FROM read_parquet('{src}')
-                  UNION ALL
-                  SELECT doc_id,
-                         'redelivered variant text of doc ' || doc_id ||
-                         ' with different words entirely' AS text,
-                         lang, source,
-                         CAST(len('redelivered variant text of doc '
-                                  || doc_id ||
-                                  ' with different words entirely')
-                              AS BIGINT) AS n_chars
-                  FROM read_parquet('{src}') WHERE doc_id % 17 = 0
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-
-
-@pytest.fixture(scope="module")
-def dup_doc_dir():
-    out = tempfile.mkdtemp(prefix="uchr_dup_docid_corpus_")
-    _build_dup_doc_corpus(out)
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+dup_doc_dir = mutated_corpus(
+    "uchr_dup_docid_corpus_",
+    {
+        "documents": """
+            SELECT * FROM documents
+            UNION ALL
+            SELECT doc_id,
+                   'redelivered variant text of doc ' || doc_id ||
+                   ' with different words entirely' AS text,
+                   lang, source,
+                   CAST(len('redelivered variant text of doc '
+                            || doc_id ||
+                            ' with different words entirely')
+                        AS BIGINT) AS n_chars
+            FROM documents WHERE doc_id % 17 = 0
+        """,
+    },
+)
 
 
 @pytest.fixture(scope="module")
 def deduped_dir(spark, dup_doc_dir):
     """The documented remediation: dedup_doc_ids' OUTPUT as the
     documents table, everything else copied through."""
-    out = tempfile.mkdtemp(prefix="uchr_deduped_docid_corpus_")
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for t in TABLES:
-        if t != "documents":
-            shutil.copyfile(f"{dup_doc_dir}/{t}.parquet", f"{out}/{t}.parquet")
-    # single parquet FILE (the corpus layout both engines read), not a
-    # Spark part-file directory
-    deduped = (
-        REGISTRY["dedup_doc_ids"]
-        .fn(spark, dup_doc_dir)
-        .orderBy("doc_id")
-        .toPandas()
-    )
-    pq.write_table(
-        pa.Table.from_pandas(deduped, preserve_index=False),
-        f"{out}/documents.parquet",
-    )
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    with copied_corpus("uchr_deduped_docid_corpus_") as out:
+        # single parquet FILE (the corpus layout both engines read), not a
+        # Spark part-file directory
+        deduped = (
+            REGISTRY["dedup_doc_ids"]
+            .fn(spark, dup_doc_dir)
+            .orderBy("doc_id")
+            .toPandas()
+        )
+        pq.write_table(
+            pa.Table.from_pandas(deduped, preserve_index=False),
+            f"{out}/documents.parquet",
+        )
+        yield out
 
 
 def test_corpus_violates_the_id_contract(dup_doc_dir):
@@ -142,16 +111,8 @@ def test_corpus_violates_the_id_contract(dup_doc_dir):
 
 
 def test_dedup_doc_ids_is_exact_on_the_violating_corpus(spark, dup_doc_dir):
-    con = oracle_connection(dup_doc_dir)
-    try:
-        spec = REGISTRY["dedup_doc_ids"]
-        sdf = spec.fn(spark, dup_doc_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, "; ".join(problems)
-        assert sdf["doc_id"].is_unique
-    finally:
-        con.close()
+    sdf = assert_matches_oracle(spark, "dedup_doc_ids", dup_doc_dir)
+    assert sdf["doc_id"].is_unique
 
 
 def test_raw_dup_ids_stay_outside_the_per_key_contract(spark, dup_doc_dir):
@@ -171,12 +132,4 @@ def test_raw_dup_ids_stay_outside_the_per_key_contract(spark, dup_doc_dir):
 
 @pytest.mark.parametrize("key", DIVERGED_KEYS)
 def test_key_is_exact_again_after_id_dedup(key, spark, deduped_dir):
-    con = oracle_connection(deduped_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, deduped_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, key, deduped_dir)

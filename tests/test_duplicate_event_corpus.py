@@ -46,20 +46,9 @@ and a marker props payload.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import assert_matches_oracle, mutated_corpus, oracle_connection
 
 KEYS = [
     # the four sweep divergences, fixed
@@ -97,68 +86,38 @@ KEYS = [
     "stream_locf_state",
 ]
 
-REGISTRY = load_registry()
+dup_event_dir = mutated_corpus(
+    "uchr_dup_event_corpus_",
+    {
+        "events": """
+            SELECT * FROM events
+            UNION ALL
+            SELECT event_id, ts, user_id, event_type,
+                   value * 3 + 1 AS value,
+                   '{"dup": true}' AS props
+            FROM events
+            WHERE event_id % 13 = 0
+        """,
+    },
+)
 
 
-@pytest.fixture(scope="module")
-def dup_event_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_dup_event_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "events":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * FROM read_parquet('{src}')
-                  UNION ALL
-                  SELECT event_id, ts, user_id, event_type,
-                         value * 3 + 1 AS value,
-                         '{{"dup": true}}' AS props
-                  FROM read_parquet('{src}')
-                  WHERE event_id % 13 = 0
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def dup_event_oracle(dup_event_dir):
-    con = oracle_connection(dup_event_dir)
-    yield con
-    con.close()
-
-
-def test_corpus_has_payload_divergent_duplicates(dup_event_oracle):
+def test_corpus_has_payload_divergent_duplicates(dup_event_dir):
     """Anti-vacuity: the planted pairs must actually be non-total
     under (ts, event_id) — same key, different value."""
-    n = dup_event_oracle.sql(
-        """
-        SELECT COUNT(*) FROM (
-          SELECT event_id, ts FROM events
-          GROUP BY event_id, ts
-          HAVING COUNT(*) > 1 AND COUNT(DISTINCT value) > 1
-        )
-        """
-    ).fetchone()[0]
+    with oracle_connection(dup_event_dir) as con:
+        n = con.sql(
+            """
+            SELECT COUNT(*) FROM (
+              SELECT event_id, ts FROM events
+              GROUP BY event_id, ts
+              HAVING COUNT(*) > 1 AND COUNT(DISTINCT value) > 1
+            )
+            """
+        ).fetchone()[0]
     assert n > 50, n  # ~1/13 of the smoke events table
 
 
 @pytest.mark.parametrize("key", KEYS)
-def test_key_matches_oracle_with_duplicate_events(
-    key, spark, dup_event_dir, dup_event_oracle
-):
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, dup_event_dir).toPandas()
-    odf = dup_event_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+def test_key_matches_oracle_with_duplicate_events(key, spark, dup_event_dir):
+    assert_matches_oracle(spark, key, dup_event_dir)

@@ -22,21 +22,18 @@ tripwire.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
 from uchr_scetl_spark.llm.dedup import DEDUP_VEC_SURVIVOR_SQL
 
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import (
+    REGISTRY,
+    assert_matches_oracle,
+    compare,
+    copied_corpus,
+    mutated_corpus,
+    oracle_connection,
+)
 
 DIVERGED_KEYS = [
     "dedup_embedding",
@@ -45,38 +42,21 @@ DIVERGED_KEYS = [
     "sim_pairwise_threshold",
 ]
 
-REGISTRY = load_registry()
 
-
-@pytest.fixture(scope="module")
-def dup_vec_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_dup_vecid_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "embeddings":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * FROM read_parquet('{src}')
-                  UNION ALL
-                  SELECT vec_id,
-                         list_transform(embedding,
-                           x -> CAST(x * 0.5 + 0.01 AS FLOAT)) AS embedding,
-                         label
-                  FROM read_parquet('{src}') WHERE vec_id % 19 = 0
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+dup_vec_dir = mutated_corpus(
+    "uchr_dup_vecid_corpus_",
+    {
+        "embeddings": """
+            SELECT * FROM embeddings
+            UNION ALL
+            SELECT vec_id,
+                   list_transform(embedding,
+                     x -> CAST(x * 0.5 + 0.01 AS FLOAT)) AS embedding,
+                   label
+            FROM embeddings WHERE vec_id % 19 = 0
+        """,
+    },
+)
 
 
 @pytest.fixture(scope="module")
@@ -86,25 +66,13 @@ def deduped_dir(dup_vec_dir):
     checked output renders the embedding as a scalar, but the
     remediation needs the exact FLOAT[] physical type, hence the
     split constant)."""
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_deduped_vecid_corpus_")
-    for t in TABLES:
-        if t != "embeddings":
-            shutil.copyfile(f"{dup_vec_dir}/{t}.parquet", f"{out}/{t}.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{dup_vec_dir}/embeddings.parquet')"
-    )
-    con.execute(
-        f"COPY ({DEDUP_VEC_SURVIVOR_SQL}) "
-        f"TO '{out}/embeddings.parquet' (FORMAT PARQUET)"
-    )
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    with copied_corpus("uchr_deduped_vecid_corpus_") as out:
+        with oracle_connection(dup_vec_dir) as con:
+            con.execute(
+                f"COPY ({DEDUP_VEC_SURVIVOR_SQL}) "
+                f"TO '{out}/embeddings.parquet' (FORMAT PARQUET)"
+            )
+        yield out
 
 
 def test_corpus_violates_the_id_contract(dup_vec_dir):
@@ -119,16 +87,8 @@ def test_corpus_violates_the_id_contract(dup_vec_dir):
 
 
 def test_dedup_vec_ids_is_exact_on_the_violating_corpus(spark, dup_vec_dir):
-    con = oracle_connection(dup_vec_dir)
-    try:
-        spec = REGISTRY["dedup_vec_ids"]
-        sdf = spec.fn(spark, dup_vec_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, "; ".join(problems)
-        assert sdf["vec_id"].is_unique
-    finally:
-        con.close()
+    sdf = assert_matches_oracle(spark, "dedup_vec_ids", dup_vec_dir)
+    assert sdf["vec_id"].is_unique
 
 
 def test_raw_dup_ids_stay_outside_the_per_key_contract(spark, dup_vec_dir):
@@ -147,12 +107,4 @@ def test_raw_dup_ids_stay_outside_the_per_key_contract(spark, dup_vec_dir):
 
 @pytest.mark.parametrize("key", DIVERGED_KEYS)
 def test_key_is_exact_again_after_id_dedup(key, spark, deduped_dir):
-    con = oracle_connection(deduped_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, deduped_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, key, deduped_dir)

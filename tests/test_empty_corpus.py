@@ -8,35 +8,25 @@ result with its normal schema, never raise."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import load_registry
+from uchr_scetl_spark.schemas import TABLES
 
 from .conftest import SF_SMOKE
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-REGISTRY = load_registry()
+from .oracle import REGISTRY, copied_corpus
 
 
 @pytest.fixture(scope="module")
 def empty_dir(spark):
-    out = tempfile.mkdtemp(prefix="uchr_empty_corpus_")
-    for t in TABLES:
-        (
-            spark.read.parquet(f"{SF_SMOKE}/{t}.parquet")
-            .limit(0)
-            .write.mode("overwrite")
-            .parquet(f"{out}/{t}.parquet")
-        )
-    yield out
-    shutil.rmtree(out, ignore_errors=True)
+    with copied_corpus("uchr_empty_corpus_") as out:
+        for t in TABLES:
+            (
+                spark.read.parquet(f"{SF_SMOKE}/{t}.parquet")
+                .limit(0)
+                .write.mode("overwrite")
+                .parquet(f"{out}/{t}.parquet")
+            )
+        yield out
 
 
 def test_every_key_survives_empty_corpus(spark, empty_dir):
@@ -62,23 +52,23 @@ def null_dir(spark):
         "o_orderkey", "o_custkey", "l_orderkey", "l_partkey", "l_suppkey",
         "l_linenumber", "event_id", "user_id", "doc_id", "vec_id", "ts",
     }
-    out = tempfile.mkdtemp(prefix="uchr_null_corpus_")
-    for t in TABLES:
-        df = spark.read.parquet(f"{SF_SMOKE}/{t}.parquet")
-        pk = [c for c in df.columns if c in keylike][:1]
-        for c in df.columns:
-            if c not in keylike:
-                df = df.withColumn(
-                    c,
-                    F.when(
-                        F.abs(F.hash(F.lit(t + c), *[df[k] for k in pk])) % 10
-                        == 0,
-                        None,
-                    ).otherwise(df[c]),
-                )
-        df.write.mode("overwrite").parquet(f"{out}/{t}.parquet")
-    yield out
-    shutil.rmtree(out, ignore_errors=True)
+    with copied_corpus("uchr_null_corpus_") as out:
+        for t in TABLES:
+            df = spark.read.parquet(f"{SF_SMOKE}/{t}.parquet")
+            pk = [c for c in df.columns if c in keylike][:1]
+            for c in df.columns:
+                if c not in keylike:
+                    df = df.withColumn(
+                        c,
+                        F.when(
+                            F.abs(F.hash(F.lit(t + c), *[df[k] for k in pk]))
+                            % 10
+                            == 0,
+                            None,
+                        ).otherwise(df[c]),
+                    )
+            df.write.mode("overwrite").parquet(f"{out}/{t}.parquet")
+        yield out
 
 
 @pytest.fixture(scope="module")
@@ -90,20 +80,19 @@ def short_doc_dir(spark):
     class the standard corpora never exercise (ADVICE round 3)."""
     from pyspark.sql import functions as F
 
-    out = tempfile.mkdtemp(prefix="uchr_short_doc_corpus_")
-    for t in TABLES:
-        df = spark.read.parquet(f"{SF_SMOKE}/{t}.parquet")
-        if t == "documents":
-            df = df.withColumn(
-                "text",
-                F.when(F.col("doc_id") % 7 == 0, F.lit(""))
-                .when(F.col("doc_id") % 7 == 1, F.lit("one"))
-                .when(F.col("doc_id") % 7 == 2, F.lit("two words"))
-                .otherwise(F.col("text")),
-            )
-        df.write.mode("overwrite").parquet(f"{out}/{t}.parquet")
-    yield out
-    shutil.rmtree(out, ignore_errors=True)
+    with copied_corpus("uchr_short_doc_corpus_") as out:
+        for t in TABLES:
+            df = spark.read.parquet(f"{SF_SMOKE}/{t}.parquet")
+            if t == "documents":
+                df = df.withColumn(
+                    "text",
+                    F.when(F.col("doc_id") % 7 == 0, F.lit(""))
+                    .when(F.col("doc_id") % 7 == 1, F.lit("one"))
+                    .when(F.col("doc_id") % 7 == 2, F.lit("two words"))
+                    .otherwise(F.col("text")),
+                )
+            df.write.mode("overwrite").parquet(f"{out}/{t}.parquet")
+        yield out
 
 
 def test_text_keys_survive_short_docs(spark, short_doc_dir):

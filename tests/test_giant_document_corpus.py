@@ -36,20 +36,9 @@ misreport the very documents a quality filter most needs to see.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import assert_matches_oracle, mutated_corpus, oracle_connection
 
 KEYS = [
     # the overflow fix
@@ -79,66 +68,34 @@ KEYS = [
     "sink_csv_roundtrip_text",
 ]
 
-REGISTRY = load_registry()
+# ~100k tokens, a sentence break every 17th: w{(i*i+i) % 4093}
+_GIANT_TEXT_SQL = """
+(SELECT string_agg('w' || ((i * i + i) % 4093)
+                   || CASE WHEN i % 17 = 16 THEN '.' ELSE '' END,
+                   ' ' ORDER BY i)
+ FROM range(100000) t(i))"""
+
+giant_doc_dir = mutated_corpus(
+    "uchr_giant_doc_corpus_",
+    {
+        "documents": f"""
+            SELECT * REPLACE (
+              CASE WHEN doc_id = 42 THEN {_GIANT_TEXT_SQL}
+                   ELSE text END AS text)
+            FROM documents
+        """,
+    },
+)
 
 
-def _giant_text(n_tokens: int = 100_000) -> str:
-    parts = []
-    for i in range(n_tokens):
-        w = f"w{(i * i + i) % 4093}"
-        parts.append(w + ("." if i % 17 == 16 else ""))
-    return " ".join(parts)
-
-
-@pytest.fixture(scope="module")
-def giant_doc_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_giant_doc_corpus_")
-    con = duckdb.connect()
-    giant = _giant_text()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "documents":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN doc_id = 42 THEN $giant ELSE text END AS text)
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """,
-                {"giant": giant},
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def giant_doc_oracle(giant_doc_dir):
-    con = oracle_connection(giant_doc_dir)
-    yield con
-    con.close()
-
-
-def test_corpus_has_the_giant_document(giant_doc_oracle):
-    n = giant_doc_oracle.sql(
-        "SELECT len(text) FROM documents WHERE doc_id = 42"
-    ).fetchone()[0]
+def test_corpus_has_the_giant_document(giant_doc_dir):
+    with oracle_connection(giant_doc_dir) as con:
+        n = con.sql(
+            "SELECT len(text) FROM documents WHERE doc_id = 42"
+        ).fetchone()[0]
     assert n > 500_000, n
 
 
 @pytest.mark.parametrize("key", KEYS)
-def test_key_matches_oracle_with_giant_document(
-    key, spark, giant_doc_dir, giant_doc_oracle
-):
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, giant_doc_dir).toPandas()
-    odf = giant_doc_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+def test_key_matches_oracle_with_giant_document(key, spark, giant_doc_dir):
+    assert_matches_oracle(spark, key, giant_doc_dir)

@@ -71,25 +71,12 @@ tripwire-pinned).
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import assert_matches_oracle, mutated_corpus, oracle_connection
 
 # the three direct props consumers — the keys the raw sweep split
 PROPS_KEYS = ["fn_json", "fn_map", "fn_variant"]
-
-REGISTRY = load_registry()
 
 _DEEP = '{"a":' * 40 + '{"k": 5}' + "}" * 40
 _PAD = "x" * 10000
@@ -124,27 +111,10 @@ CASE event_id % 29
 END AS props"""
 
 
-@pytest.fixture(scope="module")
-def hostile_props_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_hostile_props_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "events":
-            con.execute(
-                f"COPY (SELECT * REPLACE ({HOSTILE_PROPS_CASE}) "
-                f"FROM read_parquet('{src}')) "
-                f"TO '{dst}' (FORMAT PARQUET)"
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+hostile_props_dir = mutated_corpus(
+    "uchr_hostile_props_corpus_",
+    {"events": f"SELECT * REPLACE ({HOSTILE_PROPS_CASE}) FROM events"},
+)
 
 
 def test_corpus_actually_carries_hostile_payloads(hostile_props_dir):
@@ -171,16 +141,7 @@ def test_props_consumer_is_exact_on_hostile_json(
     shape flows through as NULL cells (or a quarantined row), value-
     matched against the json_valid-guarded oracle — no engine ever
     throws, no cell silently diverges."""
-    con = oracle_connection(hostile_props_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, hostile_props_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-        assert len(sdf) > 0
-    finally:
-        con.close()
+    assert len(assert_matches_oracle(spark, key, hostile_props_dir)) > 0
 
 
 def test_variant_rejects_duplicate_keys_where_json_string_keeps_first(

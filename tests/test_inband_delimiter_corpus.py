@@ -27,22 +27,12 @@ collision. Two corpora, swept through the FULL registry offline:
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
+import duckdb
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
+from uchr_scetl_spark import clear_caches
 
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-REGISTRY = load_registry()
+from .oracle import REGISTRY, assert_matches_oracle, mutated_corpus, oracle_connection
 
 # heavy raw-byte text consumers, pinned exact on both corpora
 TEXT_KEYS = [
@@ -79,49 +69,25 @@ CASE doc_id % 17
 END"""
 
 
-def _build_corpus(case_sql: str, prefix: str) -> str:
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix=prefix)
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "documents":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT doc_id, {case_sql} AS text, lang, source,
-                         CAST(length({case_sql}) AS BIGINT) AS n_chars
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    return out
+def _text_corpus(prefix: str, case_sql: str):
+    return mutated_corpus(
+        prefix,
+        {
+            "documents": f"""
+                SELECT doc_id, {case_sql} AS text, lang, source,
+                       CAST(length({case_sql}) AS BIGINT) AS n_chars
+                FROM documents
+            """,
+        },
+    )
 
 
-@pytest.fixture(scope="module")
-def sep_dir():
-    out = _build_corpus(_SEP_CASE, "uchr_inband_sep_")
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def us_dir():
-    out = _build_corpus(_US_CASE, "uchr_inband_us_")
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+sep_dir = _text_corpus("uchr_inband_sep_", _SEP_CASE)
+us_dir = _text_corpus("uchr_inband_us_", _US_CASE)
 
 
 def test_corpora_carry_the_separators(sep_dir, us_dir):
-    con = oracle_connection(sep_dir)
-    try:
+    with oracle_connection(sep_dir) as con:
         fs, gs, rs = con.sql(
             """
             SELECT count_if(contains(text, chr(28))),
@@ -130,17 +96,12 @@ def test_corpora_carry_the_separators(sep_dir, us_dir):
             FROM documents
             """
         ).fetchone()
-        assert fs > 0 and gs > 0 and rs > 0
-    finally:
-        con.close()
-    con = oracle_connection(us_dir)
-    try:
+    assert fs > 0 and gs > 0 and rs > 0
+    with oracle_connection(us_dir) as con:
         (us,) = con.sql(
             "SELECT count_if(contains(text, chr(31))) FROM documents"
         ).fetchone()
-        assert us > 0
-    finally:
-        con.close()
+    assert us > 0
 
 
 @pytest.mark.parametrize("key", TEXT_KEYS + BPE_ENCODED_KEYS)
@@ -150,16 +111,7 @@ def test_key_is_exact_on_nonreserved_separators(key, spark, sep_dir):
     become ordinary one-char symbols — must be engine-exact."""
 
     clear_caches(sep_dir)
-    con = oracle_connection(sep_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, sep_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-        assert len(sdf) > 0
-    finally:
-        con.close()
+    assert len(assert_matches_oracle(spark, key, sep_dir)) > 0
 
 
 @pytest.mark.parametrize("key", TEXT_KEYS)
@@ -170,16 +122,7 @@ def test_nonencoded_key_is_exact_on_reserved_separator(key, spark, us_dir):
     normalizer (which collapses it to a space on both engines)."""
 
     clear_caches(us_dir)
-    con = oracle_connection(us_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, us_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-        assert len(sdf) > 0
-    finally:
-        con.close()
+    assert len(assert_matches_oracle(spark, key, us_dir)) > 0
 
 
 @pytest.mark.parametrize("key", BPE_ENCODED_KEYS)
@@ -188,20 +131,14 @@ def test_bpe_encoded_keys_fail_loudly_on_inband_chr31(key, spark, us_dir):
     reserved U+001F separator must KILL the BPE training job with the
     remediation message — never silently drop the byte from the
     learned merge table."""
-    import duckdb
-
-
     clear_caches(us_dir)
     spec = REGISTRY[key]
     with pytest.raises(Exception, match="text_bpe"):
         spec.fn(spark, us_dir).toPandas()
     clear_caches(us_dir)
-    con = oracle_connection(us_dir)
-    try:
+    with oracle_connection(us_dir) as con:
         with pytest.raises(duckdb.Error, match="text_bpe"):
             con.sql(spec.oracle).df()
-    finally:
-        con.close()
 
 
 def test_chr31_would_silently_vanish_without_the_guard(spark):
@@ -210,8 +147,6 @@ def test_chr31_would_silently_vanish_without_the_guard(spark):
     delimiter byte vanishes without any error, which is exactly the
     hash-green-but-value-wrong class the admission guard exists to
     prevent."""
-    import duckdb
-
     from pyspark.sql import functions as F
 
     w = "a\x1fb"

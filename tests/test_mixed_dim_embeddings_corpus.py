@@ -31,20 +31,11 @@ Full-registry sweep on this corpus after the fix: 297 checked keys,
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
+from uchr_scetl_spark import clear_caches
 
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import REGISTRY, assert_matches_oracle, mutated_corpus, oracle_connection
 
 # the 13 SQL-checked keys the raw sweep split, now dim-conformed
 CONFORMED_KEYS = [
@@ -76,37 +67,20 @@ AGNOSTIC_KEYS = [
     "embeddings_vector_qa",
 ]
 
-REGISTRY = load_registry()
 
-
-@pytest.fixture(scope="module")
-def mixed_dim_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_mixed_dim_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "embeddings":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN vec_id % 41 = 0 THEN embedding[:32]
-                         WHEN vec_id % 43 = 0
-                           THEN list_concat(embedding, embedding[:32])
-                         ELSE embedding END AS embedding)
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+mixed_dim_dir = mutated_corpus(
+    "uchr_mixed_dim_corpus_",
+    {
+        "embeddings": """
+            SELECT * REPLACE (
+              CASE WHEN vec_id % 41 = 0 THEN embedding[:32]
+                   WHEN vec_id % 43 = 0
+                     THEN list_concat(embedding, embedding[:32])
+                   ELSE embedding END AS embedding)
+            FROM embeddings
+        """,
+    },
+)
 
 
 def test_corpus_violates_the_dimension_contract(mixed_dim_dir):
@@ -133,16 +107,7 @@ def test_model_space_key_is_exact_on_mixed_dims(key, spark, mixed_dim_dir):
     mis-index."""
 
     clear_caches(mixed_dim_dir)
-    con = oracle_connection(mixed_dim_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, mixed_dim_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-        assert len(sdf) > 0
-    finally:
-        con.close()
+    assert len(assert_matches_oracle(spark, key, mixed_dim_dir)) > 0
 
 
 @pytest.mark.parametrize("key", ANN_KEYS)
@@ -162,15 +127,7 @@ def test_dim_agnostic_key_stays_exact_raw(key, spark, mixed_dim_dir):
     mixed input — they must NOT silently grow a conform filter that
     would hide off-width rows from the very keys meant to observe
     them."""
-    con = oracle_connection(mixed_dim_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, mixed_dim_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-    finally:
-        con.close()
+    assert_matches_oracle(spark, key, mixed_dim_dir)
 
 
 def test_quarantine_is_observable_and_recoverable(spark, mixed_dim_dir):

@@ -22,27 +22,16 @@ pairs.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
+import duckdb
+import pandas as pd
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import assert_matches_oracle, copied_corpus
 
 N_PAIRS = 20  # per band (above / below threshold)
 N_TOKENS = 50
 K_ABOVE = 5  # 5 changed tokens of 50 → shingle-J ≈ 0.811 (> 0.8)
 K_BELOW = 6  # 6 changed tokens of 50 → shingle-J ≈ 0.778 (< 0.8)
-
-REGISTRY = load_registry()
 
 
 def _doc(pair: int, variant: str, k_changed: int) -> str:
@@ -55,8 +44,7 @@ def _doc(pair: int, variant: str, k_changed: int) -> str:
 
 
 @pytest.fixture(scope="module")
-def near_threshold_dir(spark):
-    out = tempfile.mkdtemp(prefix="uchr_near_threshold_")
+def near_threshold_dir():
     rows = []
     doc_id = 0
 
@@ -78,45 +66,30 @@ def near_threshold_dir(spark):
             b = _doc(f"{tag}{p}", "b", k)
             rows.append((next_batch_id(), a, "en", tag, len(a)))
             rows.append((next_index_id(), b, "en", tag, len(b)))
-    # single-FILE parquet via DuckDB (io.load and the oracle both
-    # expect the testdata layout, not a Spark part-file directory)
-    import duckdb
-    import pandas as pd
-
     docs = pd.DataFrame(
         rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
     )
-    con = duckdb.connect()
-    con.register("docs", docs)
-    con.execute(
-        f"COPY (SELECT * FROM docs ORDER BY doc_id) TO "
-        f"'{out}/documents.parquet' (FORMAT PARQUET)"
-    )
-    con.close()
-    for t in TABLES:
-        if t != "documents":
-            shutil.copyfile(f"{SF_SMOKE}/{t}.parquet", f"{out}/{t}.parquet")
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+    with copied_corpus("uchr_near_threshold_") as out:
+        # single-FILE parquet via DuckDB (io.load and the oracle both
+        # expect the testdata layout, not a Spark part-file directory)
+        with duckdb.connect() as con:
+            con.register("docs", docs)
+            con.execute(
+                f"COPY (SELECT * FROM docs ORDER BY doc_id) TO "
+                f"'{out}/documents.parquet' (FORMAT PARQUET)"
+            )
+        yield out
 
 
 def test_incremental_dedup_finds_every_near_threshold_pair(
     spark, near_threshold_dir
 ):
-    sdf = REGISTRY["dedup_incremental"].fn(spark, near_threshold_dir).toPandas()
+    sdf = assert_matches_oracle(spark, "dedup_incremental", near_threshold_dir)
     # every above-threshold pair found, every below-threshold pair
     # excluded — the construction puts exactly N_PAIRS true pairs in
     # the corpus
     assert len(sdf) == N_PAIRS, sdf
     assert (sdf["jaccard"] >= 0.8).all()
-    con = oracle_connection(near_threshold_dir)
-    try:
-        odf = con.sql(REGISTRY["dedup_incremental"].oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, "; ".join(problems)
-    finally:
-        con.close()
 
 
 def test_candidate_stage_recalls_all_true_pairs(spark, near_threshold_dir):

@@ -51,25 +51,20 @@ bit-faithful for free).
 
 from __future__ import annotations
 
-import shutil
 import struct
-import tempfile
 
+import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-REGISTRY = load_registry()
+from .oracle import (
+    REGISTRY,
+    assert_matches_oracle,
+    compare,
+    mutated_corpus,
+    oracle_connection,
+)
 
 # every key the sign-aware audit found carrying ±0.0 cells in its
 # output on this corpus (29 pass-throughs + the 2 fixed renderings)
@@ -128,70 +123,58 @@ def negzero_counts(df: pd.DataFrame) -> dict[str, int]:
     return out
 
 
-@pytest.fixture(scope="module")
-def negzero_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_negzero_corpus_")
-    con = duckdb.connect()
-    # NOTE: the ::DOUBLE casts are load-bearing — a bare -0.0 literal
-    # is DECIMAL on DuckDB too and decimals have no signed zero
-    plants = {
-        "events": """CASE WHEN event_id % 13 = 0 THEN -0.0::DOUBLE
-                          WHEN event_id % 13 = 1 THEN 0.0::DOUBLE
-                          ELSE value END AS value""",
-        "orders": """CASE WHEN o_orderkey % 17 = 0 THEN -0.0::DOUBLE
-                          WHEN o_orderkey % 17 = 1 THEN 0.0::DOUBLE
-                          ELSE o_totalprice END AS o_totalprice""",
-        "lineitem": """CASE WHEN (l_orderkey * 7 + l_linenumber) % 11 = 0
-                            THEN -0.0::DOUBLE
-                            ELSE l_discount END AS l_discount""",
-        "customer": """CASE WHEN c_custkey % 19 = 0 THEN -0.0::DOUBLE
-                            WHEN c_custkey % 19 = 1 THEN 0.0::DOUBLE
-                            ELSE c_acctbal END AS c_acctbal""",
-    }
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t in plants:
-            con.execute(
-                f"""COPY (SELECT * REPLACE ({plants[t]})
-                    FROM read_parquet('{src}'))
-                    TO '{dst}' (FORMAT PARQUET)"""
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+# NOTE: the ::DOUBLE casts are load-bearing — a bare -0.0 literal
+# is DECIMAL on DuckDB too and decimals have no signed zero
+negzero_dir = mutated_corpus(
+    "uchr_negzero_corpus_",
+    {
+        "events": """
+            SELECT * REPLACE (
+              CASE WHEN event_id % 13 = 0 THEN -0.0::DOUBLE
+                   WHEN event_id % 13 = 1 THEN 0.0::DOUBLE
+                   ELSE value END AS value)
+            FROM events""",
+        "orders": """
+            SELECT * REPLACE (
+              CASE WHEN o_orderkey % 17 = 0 THEN -0.0::DOUBLE
+                   WHEN o_orderkey % 17 = 1 THEN 0.0::DOUBLE
+                   ELSE o_totalprice END AS o_totalprice)
+            FROM orders""",
+        "lineitem": """
+            SELECT * REPLACE (
+              CASE WHEN (l_orderkey * 7 + l_linenumber) % 11 = 0
+                   THEN -0.0::DOUBLE
+                   ELSE l_discount END AS l_discount)
+            FROM lineitem""",
+        "customer": """
+            SELECT * REPLACE (
+              CASE WHEN c_custkey % 19 = 0 THEN -0.0::DOUBLE
+                   WHEN c_custkey % 19 = 1 THEN 0.0::DOUBLE
+                   ELSE c_acctbal END AS c_acctbal)
+            FROM customer""",
+    },
+)
 
 
-@pytest.fixture(scope="module")
-def negzero_oracle(negzero_dir):
-    con = oracle_connection(negzero_dir)
-    yield con
-    con.close()
-
-
-def test_corpus_carries_both_signed_zeros(negzero_oracle):
+def test_corpus_carries_both_signed_zeros(negzero_dir):
     """Anti-vacuity: every planted column holds -0.0 rows (and the
     three two-sign columns hold +0.0 rows) that survived the parquet
     round-trip with their sign bit."""
-    for tbl, col, both in [
-        ("events", "value", True),
-        ("orders", "o_totalprice", True),
-        ("customer", "c_acctbal", True),
-        ("lineitem", "l_discount", False),
-    ]:
-        neg, pos = negzero_oracle.sql(
-            f"""SELECT count_if({col} = 0 AND signbit({col})),
-                       count_if({col} = 0 AND NOT signbit({col}))
-                FROM {tbl}"""
-        ).fetchone()
-        assert neg > 0, (tbl, col)
-        if both:
-            assert pos > 0, (tbl, col)
+    with oracle_connection(negzero_dir) as con:
+        for tbl, col, both in [
+            ("events", "value", True),
+            ("orders", "o_totalprice", True),
+            ("customer", "c_acctbal", True),
+            ("lineitem", "l_discount", False),
+        ]:
+            neg, pos = con.sql(
+                f"""SELECT count_if({col} = 0 AND signbit({col})),
+                           count_if({col} = 0 AND NOT signbit({col}))
+                    FROM {tbl}"""
+            ).fetchone()
+            assert neg > 0, (tbl, col)
+            if both:
+                assert pos > 0, (tbl, col)
 
 
 def test_spark_sql_negative_zero_literal_folds(spark):
@@ -208,7 +191,7 @@ def test_spark_sql_negative_zero_literal_folds(spark):
     assert _bits(r.v) == NEG_ZERO_BITS
 
 
-def test_grouping_representative_semantics_diverge(spark, negzero_oracle):
+def test_grouping_representative_semantics_diverge(spark):
     """The fact behind the tpch_q10 fix: Spark normalizes the grouped
     double key to +0.0 (SPARK-32110); DuckDB's representative is
     first-seen and renders -0.0 when -0.0 arrives first."""
@@ -216,14 +199,15 @@ def test_grouping_representative_semantics_diverge(spark, negzero_oracle):
     rows = df.groupBy("v").count().collect()
     assert len(rows) == 1 and _bits(rows[0].v) != NEG_ZERO_BITS
 
-    rep = negzero_oracle.sql(
-        """SELECT v FROM (VALUES (-0.0::DOUBLE), (0.0::DOUBLE)) t(v)
-           GROUP BY v"""
-    ).fetchone()[0]
+    with duckdb.connect() as con:
+        rep = con.sql(
+            """SELECT v FROM (VALUES (-0.0::DOUBLE), (0.0::DOUBLE)) t(v)
+               GROUP BY v"""
+        ).fetchone()[0]
     assert _bits(rep) == NEG_ZERO_BITS  # first-seen wins on DuckDB
 
 
-def test_round_zero_sign_diverges(spark, negzero_oracle):
+def test_round_zero_sign_diverges(spark):
     """round() of a small negative renders +0.0 on Spark and -0.0 on
     DuckDB — a -0.0 bucket can be minted oracle-side only, which is
     why derived-bucket keys must not carry the zero sign."""
@@ -233,13 +217,12 @@ def test_round_zero_sign_diverges(spark, negzero_oracle):
         .collect()
     )
     assert _bits(r.r) != NEG_ZERO_BITS
-    (d,) = negzero_oracle.sql("SELECT round(-0.4::DOUBLE)").fetchone()
+    with duckdb.connect() as con:
+        (d,) = con.sql("SELECT round(-0.4::DOUBLE)").fetchone()
     assert _bits(d) == NEG_ZERO_BITS
 
 
-def test_plus_zero_identity_normalizes_on_both_engines(
-    spark, negzero_oracle
-):
+def test_plus_zero_identity_normalizes_on_both_engines(spark):
     """The fix primitive: x + 0.0 maps -0.0 → +0.0 and is exact for
     every other double — on both engines."""
     rows = (
@@ -252,10 +235,11 @@ def test_plus_zero_identity_normalizes_on_both_engines(
     assert [_bits(r.r) for r in rows] == [
         _bits(0.0), _bits(0.0), _bits(-1.5), _bits(2.5)
     ]
-    got = negzero_oracle.sql(
-        """SELECT v + 0.0 FROM (VALUES (-0.0::DOUBLE), (0.0::DOUBLE),
-           (-1.5::DOUBLE), (2.5::DOUBLE)) t(v)"""
-    ).fetchall()
+    with duckdb.connect() as con:
+        got = con.sql(
+            """SELECT v + 0.0 FROM (VALUES (-0.0::DOUBLE), (0.0::DOUBLE),
+               (-1.5::DOUBLE), (2.5::DOUBLE)) t(v)"""
+        ).fetchall()
     assert [_bits(v) for (v,) in got] == [
         _bits(0.0), _bits(0.0), _bits(-1.5), _bits(2.5)
     ]
@@ -272,16 +256,12 @@ def test_driver_compare_is_sign_blind():
 
 
 @pytest.mark.parametrize("key", SIGNED_ZERO_KEYS)
-def test_key_is_sign_exact_on_negative_zero_corpus(
-    key, spark, negzero_dir, negzero_oracle
-):
+def test_key_is_sign_exact_on_negative_zero_corpus(key, spark, negzero_dir):
     """The stricter-than-driver invariant: value-match (driver-parity
     compare) PLUS identical per-column -0.0 cell counts on both
     engines. Pass-throughs preserve the sign identically; the two
     normalized renderings (tpch_q10, win_median_sliding) emit none."""
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, negzero_dir).toPandas()
-    odf = negzero_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+    with oracle_connection(negzero_dir) as con:
+        sdf = assert_matches_oracle(spark, key, negzero_dir, con)
+        odf = con.sql(REGISTRY[key].oracle).df()
     assert negzero_counts(sdf) == negzero_counts(odf), key

@@ -25,22 +25,10 @@ plus the quarantine-set identity itself.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
+import duckdb
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-REGISTRY = load_registry()
+from .oracle import assert_matches_oracle, mutated_corpus, oracle_connection
 
 # Every hash-checked key admitted through cos_conform/COS_CONFORM_SQL
 # (the ANN keys share the Spark-side predicate but are rows-only by
@@ -56,43 +44,27 @@ COS_CONFORM_KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def null_component_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_null_component_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "embeddings":
-            # right dimension, one NULL element — the shape that
-            # passes emb_conform and must quarantine at cos_conform
-            con.execute(
-                f"""
-                COPY (
-                  SELECT vec_id,
-                         CASE WHEN vec_id % 37 = 0
-                              THEN list_append(
-                                     embedding[:len(embedding)-1],
-                                     CAST(NULL AS FLOAT))
-                              ELSE embedding END AS embedding,
-                         label
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+# right dimension, one NULL element — the shape that passes
+# emb_conform and must quarantine at cos_conform
+null_component_dir = mutated_corpus(
+    "uchr_null_component_corpus_",
+    {
+        "embeddings": """
+            SELECT vec_id,
+                   CASE WHEN vec_id % 37 = 0
+                        THEN list_append(
+                               embedding[:len(embedding)-1],
+                               CAST(NULL AS FLOAT))
+                        ELSE embedding END AS embedding,
+                   label
+            FROM embeddings
+        """,
+    },
+)
 
 
 def test_corpus_carries_null_component_vectors(null_component_dir):
-    con = oracle_connection(null_component_dir)
-    try:
+    with oracle_connection(null_component_dir) as con:
         (n,) = con.sql(
             """
             SELECT count_if(len(list_filter(embedding,
@@ -100,9 +72,7 @@ def test_corpus_carries_null_component_vectors(null_component_dir):
             FROM embeddings WHERE embedding IS NOT NULL
             """
         ).fetchone()
-        assert n > 0
-    finally:
-        con.close()
+    assert n > 0
 
 
 def test_duckdb_and_does_not_short_circuit_list_dot_product():
@@ -110,10 +80,7 @@ def test_duckdb_and_does_not_short_circuit_list_dot_product():
     conjunct FIRST, DuckDB still evaluates list_dot_product on the
     guarded rows and raises. If a DuckDB upgrade ever makes AND lazy
     here, this tripwire flags that the CASE guard can be revisited."""
-    import duckdb
-
-    con = duckdb.connect()
-    try:
+    with duckdb.connect() as con:
         with pytest.raises(Exception, match="can not contain NULL"):
             con.sql(
                 """
@@ -124,8 +91,6 @@ def test_duckdb_and_does_not_short_circuit_list_dot_product():
                   AND list_dot_product(e, e) > 0
                 """
             ).fetchall()
-    finally:
-        con.close()
 
 
 def test_quarantine_set_is_engine_identical(spark, null_component_dir):
@@ -144,8 +109,7 @@ def test_quarantine_set_is_engine_identical(spark, null_component_dir):
         .select("vec_id")
         .collect()
     }
-    con = oracle_connection(null_component_dir)
-    try:
+    with oracle_connection(null_component_dir) as con:
         oracle_ids = {
             v
             for (v,) in con.sql(
@@ -155,8 +119,6 @@ def test_quarantine_set_is_engine_identical(spark, null_component_dir):
         all_ids = {
             v for (v,) in con.sql("SELECT vec_id FROM embeddings").fetchall()
         }
-    finally:
-        con.close()
     assert spark_ids == oracle_ids
     planted = {v for v in all_ids if v % 37 == 0}
     assert planted and spark_ids == all_ids - planted
@@ -169,13 +131,4 @@ def test_key_is_exact_on_null_component_vectors(
     """Every hash-checked cos_conform key value-matches end-to-end on
     the NULL-component corpus — the oracle no longer dies where Spark
     quarantines."""
-    con = oracle_connection(null_component_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, null_component_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-        assert len(sdf) > 0
-    finally:
-        con.close()
+    assert len(assert_matches_oracle(spark, key, null_component_dir)) > 0

@@ -19,20 +19,9 @@ survive sweep plus the agreement/recall tests.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import assert_matches_oracle, mutated_corpus
 
 # every 7th vector (vec_id % 7 == 0) nulled — vec_id 0 is a PROBE, so
 # the probe-panel paths are stressed too, not just the corpus side
@@ -60,49 +49,21 @@ KEYS = [
     "embeddings_label_separation",
 ]
 
-REGISTRY = load_registry()
-
-
-@pytest.fixture(scope="module")
-def null_embedding_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_null_embedding_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "embeddings":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN vec_id % 7 = 0 THEN NULL
-                         ELSE embedding END AS embedding)
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    shutil.rmtree(out, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def null_embedding_oracle(null_embedding_dir):
-    con = oracle_connection(null_embedding_dir)
-    yield con
-    con.close()
+null_embedding_dir = mutated_corpus(
+    "uchr_null_embedding_corpus_",
+    {
+        "embeddings": """
+            SELECT * REPLACE (
+              CASE WHEN vec_id % 7 = 0 THEN NULL
+                   ELSE embedding END AS embedding)
+            FROM embeddings
+        """,
+    },
+)
 
 
 @pytest.mark.parametrize("key", KEYS)
 def test_embedding_key_matches_oracle_with_null_vectors(
-    key, spark, null_embedding_dir, null_embedding_oracle
+    key, spark, null_embedding_dir
 ):
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, null_embedding_dir).toPandas()
-    odf = null_embedding_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+    assert_matches_oracle(spark, key, null_embedding_dir)

@@ -16,20 +16,9 @@ row shape the pipeline's contract already excludes.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import assert_matches_oracle, mutated_corpus
 
 KEYS = [
     "events_sessionize",
@@ -73,54 +62,23 @@ KEYS = [
     "events_ab_power_mde",
 ]
 
-REGISTRY = load_registry()
-
-
-@pytest.fixture(scope="module")
-def null_events_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_null_events_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "events":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END
-                      AS value,
-                    CASE WHEN event_id % 11 = 0 THEN NULL ELSE props END
-                      AS props,
-                    CASE WHEN event_id % 13 = 0 THEN NULL ELSE event_type END
-                      AS event_type)
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def null_events_oracle(null_events_dir):
-    con = oracle_connection(null_events_dir)
-    yield con
-    con.close()
+null_events_dir = mutated_corpus(
+    "uchr_null_events_corpus_",
+    {
+        "events": """
+            SELECT * REPLACE (
+              CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END
+                AS value,
+              CASE WHEN event_id % 11 = 0 THEN NULL ELSE props END
+                AS props,
+              CASE WHEN event_id % 13 = 0 THEN NULL ELSE event_type END
+                AS event_type)
+            FROM events
+        """,
+    },
+)
 
 
 @pytest.mark.parametrize("key", KEYS)
-def test_events_key_matches_oracle_with_null_payloads(
-    key, spark, null_events_dir, null_events_oracle
-):
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, null_events_dir).toPandas()
-    odf = null_events_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+def test_events_key_matches_oracle_with_null_payloads(key, spark, null_events_dir):
+    assert_matches_oracle(spark, key, null_events_dir)

@@ -15,20 +15,9 @@ FIRST/LAST on both sides.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import assert_matches_oracle, mutated_corpus
 
 KEYS = [
     "agg_percentile",
@@ -53,54 +42,23 @@ KEYS = [
     "agg_group_ols_trend",
 ]
 
-REGISTRY = load_registry()
-
-
-@pytest.fixture(scope="module")
-def null_lineitem_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_null_lineitem_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "lineitem":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN l_linenumber % 5 = 0 THEN NULL
-                         ELSE l_extendedprice END AS l_extendedprice,
-                    CASE WHEN l_linenumber % 7 = 0 THEN NULL
-                         ELSE l_discount END AS l_discount,
-                    CASE WHEN l_linenumber % 11 = 0 THEN NULL
-                         ELSE l_shipdate END AS l_shipdate)
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def null_lineitem_oracle(null_lineitem_dir):
-    con = oracle_connection(null_lineitem_dir)
-    yield con
-    con.close()
+null_lineitem_dir = mutated_corpus(
+    "uchr_null_lineitem_corpus_",
+    {
+        "lineitem": """
+            SELECT * REPLACE (
+              CASE WHEN l_linenumber % 5 = 0 THEN NULL
+                   ELSE l_extendedprice END AS l_extendedprice,
+              CASE WHEN l_linenumber % 7 = 0 THEN NULL
+                   ELSE l_discount END AS l_discount,
+              CASE WHEN l_linenumber % 11 = 0 THEN NULL
+                   ELSE l_shipdate END AS l_shipdate)
+            FROM lineitem
+        """,
+    },
+)
 
 
 @pytest.mark.parametrize("key", KEYS)
-def test_window_key_matches_oracle_with_null_lineitem(
-    key, spark, null_lineitem_dir, null_lineitem_oracle
-):
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, null_lineitem_dir).toPandas()
-    odf = null_lineitem_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+def test_window_key_matches_oracle_with_null_lineitem(key, spark, null_lineitem_dir):
+    assert_matches_oracle(spark, key, null_lineitem_dir)

@@ -13,20 +13,9 @@ analysis, exact-dedup, BPE and sampling keys.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import assert_matches_oracle, mutated_corpus
 
 KEYS = [
     "text_tokenize_stats",
@@ -80,49 +69,18 @@ KEYS = [
     "sink_csv_roundtrip_text",
 ]
 
-REGISTRY = load_registry()
-
-
-@pytest.fixture(scope="module")
-def null_text_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_null_text_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "documents":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN doc_id % 7 = 0 THEN NULL ELSE text END AS text)
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def null_text_oracle(null_text_dir):
-    con = oracle_connection(null_text_dir)
-    yield con
-    con.close()
+null_text_dir = mutated_corpus(
+    "uchr_null_text_corpus_",
+    {
+        "documents": """
+            SELECT * REPLACE (
+              CASE WHEN doc_id % 7 = 0 THEN NULL ELSE text END AS text)
+            FROM documents
+        """,
+    },
+)
 
 
 @pytest.mark.parametrize("key", KEYS)
-def test_text_key_matches_oracle_with_null_texts(
-    key, spark, null_text_dir, null_text_oracle
-):
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, null_text_dir).toPandas()
-    odf = null_text_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+def test_text_key_matches_oracle_with_null_texts(key, spark, null_text_dir):
+    assert_matches_oracle(spark, key, null_text_dir)

@@ -1,33 +1,19 @@
 """Run every registered SQL-checked query against the DuckDB oracle at
-sf0.001 — the same gate the driver applies at sf0.01, caught locally
-first. Rows-only keys just have to execute."""
+the driver's scale factor (``SF_ORACLE``, sf0.01) — the same gate the
+driver applies, caught locally first. Rows-only keys just have to
+execute."""
 
 from __future__ import annotations
 
 import pytest
 
-from uchr_scetl_spark import load_registry
-
 from .conftest import SF_ORACLE
-from .oracle import compare, oracle_connection
-
-REGISTRY = load_registry()
-
-
-@pytest.fixture(scope="module")
-def oracle_con():
-    con = oracle_connection(SF_ORACLE)
-    yield con
-    con.close()
+from .oracle import REGISTRY, assert_matches_oracle
 
 
 @pytest.mark.parametrize("key", sorted(REGISTRY))
-def test_query_matches_oracle(key, spark, oracle_con):
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, SF_ORACLE).toPandas()
-    if spec.rows_only:
-        assert sdf is not None
+def test_query_matches_oracle(key, spark):
+    if REGISTRY[key].rows_only:
+        assert REGISTRY[key].fn(spark, SF_ORACLE).toPandas() is not None
         return
-    odf = oracle_con.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+    assert_matches_oracle(spark, key, SF_ORACLE)

@@ -11,29 +11,14 @@ from __future__ import annotations
 
 import pytest
 
-from uchr_scetl_spark import load_registry
-
 from .conftest import SF_FULL
-from .oracle import compare, oracle_connection
-
-REGISTRY = load_registry()
-
-
-@pytest.fixture(scope="module")
-def oracle_con_sf01():
-    con = oracle_connection(SF_FULL)
-    yield con
-    con.close()
+from .oracle import REGISTRY, assert_matches_oracle
 
 
 @pytest.mark.sf01
 @pytest.mark.parametrize("key", sorted(REGISTRY))
-def test_query_matches_oracle_at_sf01(key, spark, oracle_con_sf01):
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, SF_FULL).toPandas()
-    if spec.rows_only:
-        assert sdf is not None
+def test_query_matches_oracle_at_sf01(key, spark):
+    if REGISTRY[key].rows_only:
+        assert REGISTRY[key].fn(spark, SF_FULL).toPandas() is not None
         return
-    odf = oracle_con_sf01.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+    assert_matches_oracle(spark, key, SF_FULL)

@@ -8,6 +8,7 @@ from __future__ import annotations
 from uchr_scetl_spark import clear_caches, load_registry
 
 from .conftest import SF_SMOKE
+from .oracle import copied_corpus
 
 REGISTRY = load_registry()
 
@@ -371,14 +372,7 @@ def test_bpe_merge_rounds_scan_corpus_once(spark):
     documents scan can be cache-substituted into this plan's display
     and skew the node counts (order-dependent flake seen in the full
     suite)."""
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="uchr_bpe_plan_")
-    try:
-        shutil.copyfile(
-            f"{SF_SMOKE}/documents.parquet", f"{out}/documents.parquet"
-        )
+    with copied_corpus("uchr_bpe_plan_") as out:
         df = REGISTRY["text_bpe_merge_rounds"].fn(spark, out)
         plan = df._jdf.queryExecution().executedPlan().toString()
         # round 15: training runs eagerly inside _bpe_train (R
@@ -404,9 +398,6 @@ def test_bpe_merge_rounds_scan_corpus_once(spark):
         assert [
             r for _, rows in T._BPE_TRAIN.values(out) for r in rows
         ], "train memo must hold the corpus's merges"
-    finally:
-        clear_caches(out)
-        shutil.rmtree(out, ignore_errors=True)
 
 
 def test_distributed_quantile_windows_are_chunk_bounded(spark):

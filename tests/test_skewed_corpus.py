@@ -46,20 +46,9 @@ scale vs at 100 TB):
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import REGISTRY, assert_matches_oracle, mutated_corpus
 
 HOT_SOURCE = "hot.skew.example"
 
@@ -93,58 +82,27 @@ KEYS = [
     "events_top_paths",
 ]
 
-REGISTRY = load_registry()
-
-
-@pytest.fixture(scope="module")
-def skewed_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_skewed_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "events":
-            # ~30% of events keyed to the corpus's minimum user_id —
-            # deterministic (event_id modulus), ts/value untouched so
-            # the hot stream is a real interleaved event sequence
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN event_id % 10 < 3
-                         THEN (SELECT MIN(user_id)
-                               FROM read_parquet('{src}'))
-                         ELSE user_id END AS user_id)
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        elif t == "documents":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN doc_id % 10 < 3 THEN '{HOT_SOURCE}'
-                         ELSE source END AS source)
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def skewed_oracle(skewed_dir):
-    con = oracle_connection(skewed_dir)
-    yield con
-    con.close()
+skewed_dir = mutated_corpus(
+    "uchr_skewed_corpus_",
+    {
+        # ~30% of events keyed to the corpus's minimum user_id —
+        # deterministic (event_id modulus), ts/value untouched so the
+        # hot stream is a real interleaved event sequence
+        "events": """
+            SELECT * REPLACE (
+              CASE WHEN event_id % 10 < 3
+                   THEN (SELECT MIN(user_id) FROM events)
+                   ELSE user_id END AS user_id)
+            FROM events
+        """,
+        "documents": f"""
+            SELECT * REPLACE (
+              CASE WHEN doc_id % 10 < 3 THEN '{HOT_SOURCE}'
+                   ELSE source END AS source)
+            FROM documents
+        """,
+    },
+)
 
 
 def test_skew_is_actually_planted(spark, skewed_dir):
@@ -163,25 +121,15 @@ def test_skew_is_actually_planted(spark, skewed_dir):
 
 
 @pytest.mark.parametrize("key", KEYS)
-def test_key_matches_oracle_under_hot_keys(key, spark, skewed_dir, skewed_oracle):
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, skewed_dir).toPandas()
-    odf = skewed_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+def test_key_matches_oracle_under_hot_keys(key, spark, skewed_dir):
+    assert_matches_oracle(spark, key, skewed_dir)
 
 
-def test_partition_skew_audit_reports_the_planted_skew(
-    spark, skewed_dir, skewed_oracle
-):
+def test_partition_skew_audit_reports_the_planted_skew(spark, skewed_dir):
     """etl_partition_skew_audit is the key whose OUTPUT is the skew
     measurement — on this corpus it must both value-match AND flag a
     dominant partition share consistent with the planted 30%."""
-    spec = REGISTRY["etl_partition_skew_audit"]
-    sdf = spec.fn(spark, skewed_dir).toPandas()
-    odf = skewed_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"etl_partition_skew_audit: {'; '.join(problems)}"
+    assert_matches_oracle(spark, "etl_partition_skew_audit", skewed_dir)
 
 
 def test_source_cap_bites_the_hot_source(spark, skewed_dir):

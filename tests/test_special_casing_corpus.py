@@ -36,22 +36,11 @@ exceptions.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
+from uchr_scetl_spark import clear_caches
 
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-REGISTRY = load_registry()
+from .oracle import assert_matches_oracle, mutated_corpus, oracle_connection
 
 # heavy text keys pinned EXACT on special-casing text (plus the fixed
 # dedup pair); the two declared-scope keys are asserted separately
@@ -78,36 +67,20 @@ CASE doc_id % 13
 END"""
 
 
-@pytest.fixture(scope="module")
-def special_casing_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_special_casing_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "documents":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT doc_id, {_TEXT_CASE} AS text, lang, source,
-                         CAST(length({_TEXT_CASE}) AS BIGINT) AS n_chars
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+special_casing_dir = mutated_corpus(
+    "uchr_special_casing_corpus_",
+    {
+        "documents": f"""
+            SELECT doc_id, {_TEXT_CASE} AS text, lang, source,
+                   CAST(length({_TEXT_CASE}) AS BIGINT) AS n_chars
+            FROM documents
+        """,
+    },
+)
 
 
 def test_corpus_carries_special_casing(special_casing_dir):
-    con = oracle_connection(special_casing_dir)
-    try:
+    with oracle_connection(special_casing_dir) as con:
         sz, lig, dotted = con.sql(
             """
             SELECT count_if(contains(text, 'ß')),
@@ -116,9 +89,7 @@ def test_corpus_carries_special_casing(special_casing_dir):
             FROM documents
             """
         ).fetchone()
-        assert sz > 0 and lig > 0 and dotted > 0
-    finally:
-        con.close()
+    assert sz > 0 and lig > 0 and dotted > 0
 
 
 @pytest.mark.parametrize("key", EXACT_KEYS)
@@ -127,16 +98,7 @@ def test_key_is_exact_on_special_casing_text(key, spark, special_casing_dir):
     dedup canonicalization must be engine-exact on ß/ﬁ/İ text."""
 
     clear_caches(special_casing_dir)
-    con = oracle_connection(special_casing_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, special_casing_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-        assert len(sdf) > 0
-    finally:
-        con.close()
+    assert len(assert_matches_oracle(spark, key, special_casing_dir)) > 0
 
 
 def test_ascii_fold_canonicalization_ignores_special_casing(spark):

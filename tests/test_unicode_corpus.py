@@ -18,20 +18,9 @@ test_properties.py.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import assert_matches_oracle, mutated_corpus
 
 # every 5th doc gets multibyte tokens appended — Greek, CJK, emoji,
 # a combining-diacritic umlaut, and a 4-byte astral-plane char
@@ -91,53 +80,20 @@ KEYS = [
     "dedup_shingle_df_profile",
 ]
 
-REGISTRY = load_registry()
-
-
-@pytest.fixture(scope="module")
-def unicode_dir():
-    # single-FILE parquet per table (the oracle harness and io.load
-    # both expect the testdata layout), so the rewrite goes through
-    # DuckDB COPY and untouched tables are byte-copied
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_unicode_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "documents":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN doc_id % 5 = 0
-                         THEN text || '{_UNICODE_SUFFIX}'
-                         ELSE text END AS text)
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    shutil.rmtree(out, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def unicode_oracle(unicode_dir):
-    con = oracle_connection(unicode_dir)
-    yield con
-    con.close()
+unicode_dir = mutated_corpus(
+    "uchr_unicode_corpus_",
+    {
+        "documents": f"""
+            SELECT * REPLACE (
+              CASE WHEN doc_id % 5 = 0
+                   THEN text || '{_UNICODE_SUFFIX}'
+                   ELSE text END AS text)
+            FROM documents
+        """,
+    },
+)
 
 
 @pytest.mark.parametrize("key", KEYS)
-def test_text_key_matches_oracle_on_unicode_corpus(
-    key, spark, unicode_dir, unicode_oracle
-):
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, unicode_dir).toPandas()
-    odf = unicode_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+def test_text_key_matches_oracle_on_unicode_corpus(key, spark, unicode_dir):
+    assert_matches_oracle(spark, key, unicode_dir)

@@ -38,20 +38,9 @@ Full-registry sweep results (the committed contract):
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from .oracle import REGISTRY, assert_matches_oracle, mutated_corpus, oracle_connection
 
 NFC_CAFE = "café"          # é precomposed
 NFD_CAFE = "café"         # e + combining acute
@@ -71,75 +60,37 @@ KEYS = [
     "etl_publish_checksums",
 ]
 
-REGISTRY = load_registry()
-
-
-@pytest.fixture(scope="module")
-def unicode_fold_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_unicode_fold_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "customer":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN c_custkey % 23 = 1 THEN 'straße'
-                         WHEN c_custkey % 23 = 2 THEN 'STRASSE'
-                         WHEN c_custkey % 23 = 3 THEN 'İstanbul'
-                         WHEN c_custkey % 23 = 4 THEN 'istanbul'
-                         WHEN c_custkey % 23 = 5 THEN 'ΣΙΣΥΦΟΣ'
-                         WHEN c_custkey % 23 = 6 THEN 'σίσυφος'
-                         ELSE c_mktsegment END AS c_mktsegment)
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        elif t == "documents":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * REPLACE (
-                    CASE WHEN doc_id % 13 = 1 THEN text || ' {NFC_CAFE}'
-                         WHEN doc_id % 13 = 2 THEN text || ' {NFD_CAFE}'
-                         ELSE text END AS text)
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
-
-
-@pytest.fixture(scope="module")
-def unicode_fold_oracle(unicode_fold_dir):
-    con = oracle_connection(unicode_fold_dir)
-    yield con
-    con.close()
+unicode_fold_dir = mutated_corpus(
+    "uchr_unicode_fold_corpus_",
+    {
+        "customer": """
+            SELECT * REPLACE (
+              CASE WHEN c_custkey % 23 = 1 THEN 'straße'
+                   WHEN c_custkey % 23 = 2 THEN 'STRASSE'
+                   WHEN c_custkey % 23 = 3 THEN 'İstanbul'
+                   WHEN c_custkey % 23 = 4 THEN 'istanbul'
+                   WHEN c_custkey % 23 = 5 THEN 'ΣΙΣΥΦΟΣ'
+                   WHEN c_custkey % 23 = 6 THEN 'σίσυφος'
+                   ELSE c_mktsegment END AS c_mktsegment)
+            FROM customer
+        """,
+        "documents": f"""
+            SELECT * REPLACE (
+              CASE WHEN doc_id % 13 = 1 THEN text || ' {NFC_CAFE}'
+                   WHEN doc_id % 13 = 2 THEN text || ' {NFD_CAFE}'
+                   ELSE text END AS text)
+            FROM documents
+        """,
+    },
+)
 
 
 @pytest.mark.parametrize("key", KEYS)
-def test_key_matches_oracle_with_fold_hazards(
-    key, spark, unicode_fold_dir, unicode_fold_oracle
-):
-    spec = REGISTRY[key]
-    sdf = spec.fn(spark, unicode_fold_dir).toPandas()
-    odf = unicode_fold_oracle.sql(spec.oracle).df()
-    problems = compare(sdf, odf)
-    assert not problems, f"{key}: {'; '.join(problems)}"
+def test_key_matches_oracle_with_fold_hazards(key, spark, unicode_fold_dir):
+    assert_matches_oracle(spark, key, unicode_fold_dir)
 
 
-def test_nfc_nfd_are_distinct_bytes_on_both_engines(
-    spark, unicode_fold_dir, unicode_fold_oracle
-):
+def test_nfc_nfd_are_distinct_bytes_on_both_engines(spark, unicode_fold_dir):
     """The normalize-first contract: NFC and NFD spellings of the same
     visible word are DIFFERENT tokens to the engine (and to the
     oracle) — dedup/grouping never silently merges them, and never
@@ -154,13 +105,14 @@ def test_nfc_nfd_are_distinct_bytes_on_both_engines(
         .distinct()
         .count()
     )
-    n_oracle = unicode_fold_oracle.sql(
-        f"""
-        SELECT COUNT(DISTINCT tok) FROM (
-          SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-        ) WHERE tok IN ('{NFC_CAFE}', '{NFD_CAFE}')
-        """
-    ).fetchone()[0]
+    with oracle_connection(unicode_fold_dir) as con:
+        n_oracle = con.sql(
+            f"""
+            SELECT COUNT(DISTINCT tok) FROM (
+              SELECT unnest(string_split(text, ' ')) AS tok FROM documents
+            ) WHERE tok IN ('{NFC_CAFE}', '{NFD_CAFE}')
+            """
+        ).fetchone()[0]
     assert n_spark == 2, n_spark
     assert n_oracle == 2, n_oracle
 
@@ -178,9 +130,7 @@ def test_collation_semantics_pinned_spark_side(spark, unicode_fold_dir):
     assert {"istanbul", "i̇stanbul"} <= segs
 
 
-def test_collation_oracle_divergence_is_the_dotted_i_class(
-    spark, unicode_fold_dir, unicode_fold_oracle
-):
+def test_collation_oracle_divergence_is_the_dotted_i_class(spark, unicode_fold_dir):
     """The documented cross-engine scope: DuckDB's lower() merges the
     İ pair (10 groups) where UTF8_LCASE keeps 11. This assertion is
     the tripwire — if either engine's case mapping changes, or if a
@@ -188,6 +138,7 @@ def test_collation_oracle_divergence_is_the_dotted_i_class(
     revisited rather than silently drifting."""
     spec = REGISTRY["fn_collation"]
     n_spark = len(spec.fn(spark, unicode_fold_dir).toPandas())
-    n_oracle = len(unicode_fold_oracle.sql(spec.oracle).df())
+    with oracle_connection(unicode_fold_dir) as con:
+        n_oracle = len(con.sql(spec.oracle).df())
     assert n_spark == 11, n_spark
     assert n_oracle == 10, n_oracle

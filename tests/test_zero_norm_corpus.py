@@ -23,22 +23,9 @@ sweep proves them exact raw. Full-registry sweep on this corpus:
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import clear_caches, load_registry
-
-from .conftest import SF_SMOKE
-from .oracle import compare, oracle_connection
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-REGISTRY = load_registry()
+from .oracle import assert_matches_oracle, mutated_corpus, oracle_connection
 
 # the seven raisers (now admitted through cos_conform) + the two
 # silent-drop cosine keys + the dot-only keys pinned exact on raw
@@ -63,35 +50,20 @@ DOT_ONLY_KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def zero_norm_dir():
-    import duckdb
-
-    out = tempfile.mkdtemp(prefix="uchr_zero_norm_corpus_")
-    con = duckdb.connect()
-    for t in TABLES:
-        src = f"{SF_SMOKE}/{t}.parquet"
-        dst = f"{out}/{t}.parquet"
-        if t == "embeddings":
-            con.execute(
-                f"""
-                COPY (
-                  SELECT vec_id,
-                         CASE WHEN vec_id % 17 = 0
-                              THEN CAST(list_transform(embedding,
-                                     x -> CAST(0.0 AS FLOAT)) AS FLOAT[])
-                              ELSE embedding END AS embedding,
-                         label
-                  FROM read_parquet('{src}')
-                ) TO '{dst}' (FORMAT PARQUET)
-                """
-            )
-        else:
-            shutil.copyfile(src, dst)
-    con.close()
-    yield out
-    clear_caches(out)
-    shutil.rmtree(out, ignore_errors=True)
+zero_norm_dir = mutated_corpus(
+    "uchr_zero_norm_corpus_",
+    {
+        "embeddings": """
+            SELECT vec_id,
+                   CASE WHEN vec_id % 17 = 0
+                        THEN CAST(list_transform(embedding,
+                               x -> CAST(0.0 AS FLOAT)) AS FLOAT[])
+                        ELSE embedding END AS embedding,
+                   label
+            FROM embeddings
+        """,
+    },
+)
 
 
 def test_corpus_carries_zero_vectors(zero_norm_dir):
@@ -115,16 +87,7 @@ def test_key_is_exact_on_zero_norm_vectors(key, spark, zero_norm_dir):
     """Cosine keys quarantine zero-norm rows at admission (no engine
     ever divides by zero); dot-only keys process them raw — both
     value-matched end-to-end."""
-    con = oracle_connection(zero_norm_dir)
-    try:
-        spec = REGISTRY[key]
-        sdf = spec.fn(spark, zero_norm_dir).toPandas()
-        odf = con.sql(spec.oracle).df()
-        problems = compare(sdf, odf)
-        assert not problems, f"{key}: {'; '.join(problems)}"
-        assert len(sdf) > 0
-    finally:
-        con.close()
+    assert len(assert_matches_oracle(spark, key, zero_norm_dir)) > 0
 
 
 def test_division_by_zero_failure_modes_diverge(spark):

@@ -23,7 +23,7 @@ window still get a diffable verdict every round.
 from __future__ import annotations
 
 import json
-import math
+import os
 import sys
 import time
 import traceback
@@ -32,7 +32,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from uchr_scetl_spark import get_session, load_registry  # noqa: E402
 from uchr_scetl_spark.schemas import TABLES  # noqa: E402

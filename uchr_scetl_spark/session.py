@@ -23,7 +23,9 @@ Config rationale (SURVEY.md §4.2):
 from __future__ import annotations
 
 import os
+import sys
 
+from pyspark import cloudpickle
 from pyspark.sql import SparkSession
 
 from .memo import Memo
@@ -51,6 +53,11 @@ def default_parallelism() -> int:
 
 def configure(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime confs to an existing session (idempotent)."""
+    # Python workers unpickle the engine's UDFs and mapInPandas bodies.
+    # By reference that needs the package importable on every worker,
+    # which holds only when the driver runs from the repo root; by value
+    # the code travels with the function, as on a real cluster.
+    cloudpickle.register_pickle_by_value(sys.modules[__package__])
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
