@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import signal
 import subprocess
 import sys
 
@@ -339,15 +340,32 @@ def test_python_worker_keys_run_from_a_foreign_cwd(tmp_path):
     script = _FOREIGN_CWD_SCRIPT.format(
         repo=repo, keys=PYTHON_WORKER_KEYS, sf=SF_SMOKE
     )
-    proc = subprocess.run(
-        [sys.executable, "-c", script],
-        cwd=tmp_path,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=900,
-    )
-    assert proc.returncode == 0, proc.stderr[-3000:]
+    # The child's JVM inherits the child's output, so it goes to a file
+    # rather than a pipe that a lingering JVM could hold open. The child
+    # leads its own process group, killed whole once it exits or runs
+    # past its limit (about 5x its ~25 s on 4 cores).
+    log = tmp_path / "child.log"
+    with open(log, "w") as out:
+        proc = subprocess.Popen(
+            [sys.executable, "-c", script],
+            cwd=tmp_path,
+            env=env,
+            stdin=subprocess.DEVNULL,
+            stdout=out,
+            stderr=subprocess.STDOUT,
+            start_new_session=True,
+        )
+        try:
+            returncode = proc.wait(timeout=120)
+        except subprocess.TimeoutExpired:
+            returncode = None
+        finally:
+            try:
+                os.killpg(proc.pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+            proc.wait()
+    assert returncode == 0, log.read_text()[-3000:]
 
 
 def test_corpus_harnesses_are_shared():

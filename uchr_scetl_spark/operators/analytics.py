@@ -1145,7 +1145,7 @@ _MARKOV_PAIRS_SQL = f"""
       SELECT from_state, to_state, CAST(COUNT(*) AS BIGINT) AS n
       FROM raw_pairs GROUP BY 1, 2
     ),
-    ppm AS (
+    ppm AS MATERIALIZED (
       SELECT from_state, to_state,
              (n * 1000000) // SUM(n) OVER (PARTITION BY from_state)
                AS p_ppm
@@ -1154,12 +1154,16 @@ _MARKOV_PAIRS_SQL = f"""
 """
 
 
+# The oracle's CTEs are MATERIALIZED: inlined, each v{t} re-expands
+# every earlier iteration and the ppm journey build beneath it, and
+# DuckDB 1.0 spends ~50 s on the 4-row result at sf0.01 on 4 cores
+# (0.4 s materialized, same rows).
 def _markov_oracle() -> str:
     its = []
     prev = "v0"
     for t in range(1, MARKOV_ITERS + 1):
         its.append(f"""
-    v{t} AS (
+    v{t} AS MATERIALIZED (
       SELECT vr.removed, p.from_state AS state,
              CAST(SUM(p.p_ppm *
                CASE WHEN p.to_state = '{_MK_CONV}' THEN 1000000
@@ -1184,7 +1188,7 @@ def _markov_oracle() -> str:
       SELECT ch AS removed FROM channels
       UNION ALL SELECT '{_MK_NONE}'
     ),
-    v0 AS (
+    v0 AS MATERIALIZED (
       SELECT vr.removed, p.from_state AS state, CAST(0 AS BIGINT) AS v
       FROM variants vr JOIN ppm p
         ON p.from_state <> vr.removed AND p.to_state <> vr.removed
