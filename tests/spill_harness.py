@@ -1,6 +1,6 @@
-"""Shared harness for the forced-spill determinism gate (round 12).
+"""Shared harness for the execution-axis determinism gates (round 12+).
 
-Two pieces:
+Three pieces:
 
 - :func:`canonical_digest` — a bit-exact, order-canonical sha256 of a
   DataFrame's collected rows (floats by IEEE bit pattern, decimals by
@@ -21,6 +21,13 @@ Two pieces:
   and ``spark.shuffle.spill.numElementsForceSpillThreshold`` are
   fixed at JVM/context creation and cannot be toggled on the shared
   test session.
+
+- the gate helpers every execution-axis test uses instead of its own
+  copy: :func:`baseline_digest` (the default-config digest of a key,
+  computed once per test session), :func:`conf_patch` (runtime SQL
+  confs for one block), :func:`run_child` (a second driver process
+  that cannot outlive its test) and :func:`run_harness` (this
+  runner in a child, returning its result JSON).
 
 Spill knobs, all verified to fire (probe, round 12). Thresholds are
 sized so the registry keys THEMSELVES spill even at smoke scale
@@ -55,12 +62,17 @@ gate asserts on):
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import decimal
 import hashlib
 import json
+import os
+import signal
 import struct
+import subprocess
 import sys
+import tempfile
 
 SPILL_CONFS_STATIC = {
     "spark.memory.fraction": "0.3",
@@ -160,14 +172,118 @@ def _executed_spill_bytes(df) -> int:
     return total
 
 
+_BASELINES: dict[str, str] = {}
+
+
+def baseline_digest(spark, key: str) -> str:
+    """Digest of ``key`` at SF_SMOKE under the default session config,
+    computed once per test session and shared by every gate that
+    compares a varied run against it."""
+    if key not in _BASELINES:
+        from uchr_scetl_spark import load_registry
+
+        from .conftest import SF_SMOKE
+
+        _BASELINES[key] = canonical_digest(load_registry()[key].fn(spark, SF_SMOKE))
+    return _BASELINES[key]
+
+
+@contextlib.contextmanager
+def conf_patch(spark, confs: dict[str, str]):
+    """Set runtime SQL confs for the block; restore each old value (or
+    unset it) on exit."""
+    saved = {}
+    try:
+        for k, v in confs.items():
+            try:
+                saved[k] = spark.conf.get(k)
+            except Exception:
+                saved[k] = None
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, old in saved.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
+
+
+def run_child(argv: list[str], timeout: float, env=None, cwd=None) -> str:
+    """Run a child process (by default in the repo root) and return its
+    stdout text; a nonzero exit or a run past ``timeout`` seconds fails
+    with the tail of its stderr.
+
+    Output goes to files, not pipes: a JVM grandchild inherits the
+    child's stdout and can hold a pipe open long after the child
+    exits, which ``subprocess.run(capture_output=True)`` reports as a
+    timeout. stdin is /dev/null, and the child leads its own process
+    group, killed whole once the child exits or times out, so no
+    grandchild outlives the test."""
+    from .conftest import REPO
+
+    with (
+        tempfile.TemporaryFile("w+", errors="replace") as out,
+        tempfile.TemporaryFile("w+", errors="replace") as err,
+    ):
+        proc = subprocess.Popen(
+            argv,
+            cwd=cwd or REPO,
+            env=env,
+            stdin=subprocess.DEVNULL,
+            stdout=out,
+            stderr=err,
+            start_new_session=True,
+        )
+        try:
+            returncode = proc.wait(timeout=timeout)
+        except subprocess.TimeoutExpired:
+            returncode = None
+        finally:
+            with contextlib.suppress(ProcessLookupError):
+                os.killpg(proc.pid, signal.SIGKILL)
+            proc.wait()
+        out.seek(0)
+        err.seek(0)
+        stdout, stderr = out.read(), err.read()
+    if returncode != 0:
+        how = f"timed out after {timeout} s" if returncode is None else f"exited {returncode}"
+        raise AssertionError(f"child {how}:\n{stderr[-3000:]}")
+    return stdout
+
+
+def run_harness(args: list[str], master: str | None = None, timeout: float = 1800) -> dict:
+    """Run this harness over SF_SMOKE in a child driver and return its
+    result JSON. ``master`` sets SPARK_GRAFT_MASTER; the repo root is
+    put on the child's PYTHONPATH."""
+    from .conftest import REPO, SF_SMOKE
+
+    env = dict(os.environ)
+    if master is not None:
+        env["SPARK_GRAFT_MASTER"] = master
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, env.get("PYTHONPATH")) if p
+    )
+    fd, out = tempfile.mkstemp(suffix=".json", prefix="uchr_gate_")
+    os.close(fd)
+    try:
+        run_child(
+            [sys.executable, "-m", "tests.spill_harness", out, SF_SMOKE, *args],
+            timeout,
+            env=env,
+        )
+        with open(out) as f:
+            return json.load(f)
+    finally:
+        os.unlink(out)
+
+
 def _canary_spill_bytes(spark) -> int:
     """Prove the forced-spill machinery engages: a window+sort plan
     and a hash-agg plan whose executed metrics must show disk spill.
     AQE is disabled for the canaries only, so the executed plan the
     metrics walk sees is the static one."""
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    with conf_patch(spark, {"spark.sql.adaptive.enabled": "false"}):
         # 20k rows: far above every forced threshold (so the spill
         # paths are guaranteed to run) but small enough that the
         # per-spill-file ≥1 MB read-ahead buffers the 16-row window
@@ -188,13 +304,9 @@ def _canary_spill_bytes(spark) -> int:
         )
         agg.collect()
         return _executed_spill_bytes(win) + _executed_spill_bytes(agg)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
 
 
 def build_session(spill: bool, extra_confs: dict[str, str] | None = None):
-    import os
-
     from pyspark.sql import SparkSession
 
     from uchr_scetl_spark.session import configure, default_parallelism
@@ -248,8 +360,6 @@ def install_load_wrapper(spark, fault: bool):
     ``uchr_scetl_spark.io.load`` alone would miss them. Call AFTER
     ``load_registry()`` has imported everything.
     """
-    import sys as _sys
-
     import uchr_scetl_spark.io as uio
 
     orig = uio.load
@@ -278,7 +388,7 @@ def install_load_wrapper(spark, fault: bool):
 
         return df.mapInPandas(passthrough, schema=df.schema)
 
-    for mod in list(_sys.modules.values()):
+    for mod in list(sys.modules.values()):
         if getattr(mod, "__name__", "").startswith("uchr_scetl_spark"):
             if getattr(mod, "load", None) is orig:
                 mod.load = wrapped_load
@@ -307,9 +417,6 @@ def start_chaos_killer(interval_s: float, target: str = "executor"):
 
     Returns a dict whose 'kills' entry counts processes actually
     killed (the anti-vacuity evidence); set 'stop' to end the thread."""
-    import os
-    import signal
-    import subprocess as sp
     import threading
     import time
 
@@ -347,7 +454,7 @@ def start_chaos_killer(interval_s: float, target: str = "executor"):
             if state["stop"]:
                 return
             try:
-                pids = sp.run(
+                pids = subprocess.run(
                     ["pgrep", "-f", pattern],
                     capture_output=True,
                     text=True,

@@ -45,7 +45,7 @@ import pytest
 from uchr_scetl_spark import clear_caches, load_registry
 
 from .conftest import SF_SMOKE
-from .spill_harness import canonical_digest
+from .spill_harness import baseline_digest, canonical_digest, conf_patch
 from .test_determinism import KEYS
 
 REGISTRY = load_registry()
@@ -73,49 +73,12 @@ SKEW_CONFS = {
 }
 
 
-class _conf_patch:
-    """Set SQL confs, restore on exit (values or unset)."""
-
-    def __init__(self, spark, confs):
-        self.spark = spark
-        self.confs = confs
-        self.saved = {}
-
-    def __enter__(self):
-        for k, v in self.confs.items():
-            try:
-                self.saved[k] = self.spark.conf.get(k)
-            except Exception:
-                self.saved[k] = None
-            self.spark.conf.set(k, v)
-        return self
-
-    def __exit__(self, *exc):
-        for k, old in self.saved.items():
-            if old is None:
-                self.spark.conf.unset(k)
-            else:
-                self.spark.conf.set(k, old)
-        return False
-
-
-_baseline_cache: dict[str, str] = {}
-
-
-def _baseline(spark, key):
-    if key not in _baseline_cache:
-        _baseline_cache[key] = canonical_digest(
-            REGISTRY[key].fn(spark, SF_SMOKE)
-        )
-    return _baseline_cache[key]
-
-
 @pytest.mark.parametrize("variant", ["aqe_off", "aqe_aggressive"])
 @pytest.mark.parametrize("key", KEYS)
 def test_result_invariant_under_aqe_config(spark, key, variant):
     confs = AQE_OFF if variant == "aqe_off" else AQE_AGGRESSIVE
-    baseline = _baseline(spark, key)
-    with _conf_patch(spark, confs):
+    baseline = baseline_digest(spark, key)
+    with conf_patch(spark, confs):
         got = canonical_digest(REGISTRY[key].fn(spark, SF_SMOKE))
     assert got == baseline, f"{key} changed results under {variant}"
 
@@ -150,10 +113,10 @@ def test_skew_split_triggers_and_preserves_results(spark):
     """The skew axis with its anti-vacuity: under 1 KB thresholds the
     final adaptive plan must SHOW the skew split happened, and the
     split result must be bit-identical to the static AQE-off plan."""
-    with _conf_patch(spark, AQE_OFF):
+    with conf_patch(spark, AQE_OFF):
         want = canonical_digest(_hot_join(spark, SF_SMOKE))
 
-    with _conf_patch(spark, SKEW_CONFS):
+    with conf_patch(spark, SKEW_CONFS):
         df = _hot_join(spark, SF_SMOKE)
         rows = df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -176,7 +139,7 @@ def test_kmeans_assign_invariant_under_aqe_off(spark):
         REGISTRY["sim_kmeans_assign"].fn(spark, SF_SMOKE)
     )
     clear_caches(SF_SMOKE)
-    with _conf_patch(spark, AQE_OFF):
+    with conf_patch(spark, AQE_OFF):
         got = canonical_digest(
             REGISTRY["sim_kmeans_assign"].fn(spark, SF_SMOKE)
         )

@@ -27,11 +27,11 @@ introduced two operability costs a 100 TB pipeline session pays:
 from __future__ import annotations
 
 import json
-import subprocess
 import sys
 import textwrap
 
-REPO = __file__.rsplit("/", 2)[0]
+from .conftest import REPO, SF_SMOKE
+from .spill_harness import run_child
 
 _SOAK_SCRIPT = textwrap.dedent(
     """
@@ -94,21 +94,15 @@ _SOAK_SCRIPT = textwrap.dedent(
 
 
 def _run_soak(cleaner: bool) -> dict:
-    from .conftest import SF_SMOKE
-
-    proc = subprocess.run(
+    stdout = run_child(
         [
             sys.executable,
             "-c",
             _SOAK_SCRIPT % {"repo": REPO, "cleaner": str(cleaner).lower(), "sf": SF_SMOKE},
         ],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
         timeout=900,
     )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    return json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(stdout.strip().splitlines()[-1])
 
 
 def test_checkpoint_files_leak_without_the_cleaner():
@@ -202,15 +196,11 @@ _PIN_SCRIPT = textwrap.dedent(
 
 
 def _run_pin(reliable: bool) -> dict:
-    proc = subprocess.run(
+    stdout = run_child(
         [sys.executable, "-c", _PIN_SCRIPT % {"repo": REPO, "reliable": reliable}],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
         timeout=900,
     )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    return json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(stdout.strip().splitlines()[-1])
 
 
 def test_local_checkpoint_blocks_pin_executors_until_released():

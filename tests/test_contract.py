@@ -4,17 +4,19 @@ from __future__ import annotations
 
 import importlib.util
 import os
-import signal
-import subprocess
 import sys
+import time
 
 import pytest
 
 from uchr_scetl_spark import load_registry
 
+from .conftest import REPO, SF_SMOKE
+from .spill_harness import run_child
+
 
 def _load_entry_module():
-    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "__spark_entry__.py")
+    path = os.path.join(REPO, "__spark_entry__.py")
     spec = importlib.util.spec_from_file_location("spark_entry", path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -56,8 +58,6 @@ def test_checked_outputs_carry_scalar_columns_only(spark):
     Rows-only keys are exempt — no hash is taken for them, and nested
     payloads (LSH signature arrays etc.) are their point."""
     from pyspark.sql.types import ArrayType, MapType, StructType
-
-    from .conftest import SF_SMOKE
 
     offenders = []
     for key, spec in sorted(load_registry().items()):
@@ -107,8 +107,6 @@ def test_boolean_outputs_are_allowlisted_nonnull_by_construction(spark):
     as a raw boolean."""
     from pyspark.sql.types import BooleanType
 
-    from .conftest import SF_SMOKE
-
     offenders = []
     for key, spec in sorted(load_registry().items()):
         schema = spec.fn(spark, SF_SMOKE).schema
@@ -125,9 +123,6 @@ def test_boolean_outputs_are_allowlisted_nonnull_by_construction(spark):
 def test_bucketed_join_has_no_shuffle(spark):
     """The join of the two bucketed tables must read co-located buckets:
     no Exchange may appear between the table scans and the join."""
-    from uchr_scetl_spark import load_registry
-    from .conftest import SF_SMOKE
-
     df = load_registry()["join_bucketed"].fn(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     join_part = plan.split("SortMergeJoin")[-1] if "SortMergeJoin" in plan else plan
@@ -138,9 +133,6 @@ def test_bucketed_join_has_no_shuffle(spark):
 def test_frame_sample_expansion(spark):
     """Every 32-byte payload must expand to exactly 4 frames with
     stride-2 indices (0, 2, 4, 6)."""
-    from uchr_scetl_spark import load_registry
-    from .conftest import SF_SMOKE
-
     rows = load_registry()["multimodal_frame_sample"].fn(spark, SF_SMOKE).collect()
     by_doc: dict[int, list[int]] = {}
     for r in rows:
@@ -152,9 +144,6 @@ def test_frame_sample_expansion(spark):
 def test_partition_pruning_in_plan(spark):
     """The status filter must reach the scan as a PartitionFilter (not
     a post-scan Filter over all partitions)."""
-    from uchr_scetl_spark import load_registry
-    from .conftest import SF_SMOKE
-
     df = load_registry()["scan_pruned_partition"].fn(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(o_orderstatus" in plan or (
@@ -174,8 +163,6 @@ def test_no_output_column_is_local_tz_timestamp(spark):
     timestamp_ntz input to TIMESTAMP (the coercion is pinned below so
     an upstream change is noticed)."""
     from pyspark.sql.types import TimestampType
-
-    from .conftest import SF_SMOKE
 
     offenders = []
     for key, spec in sorted(load_registry().items()):
@@ -283,7 +270,7 @@ def test_operators_catalog_is_current():
     drift is the generator's business, not a gate."""
     import re
 
-    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "OPERATORS.md")
+    path = os.path.join(REPO, "OPERATORS.md")
     assert os.path.exists(path), "OPERATORS.md missing - run tools/gen_operators_md.py"
     rows = {}
     with open(path) as f:
@@ -332,40 +319,13 @@ def test_python_worker_keys_run_from_a_foreign_cwd(tmp_path):
     whose PYTHONPATH is unset runs every key with package-defined
     worker code; ``configure`` ships the package to the workers by
     value, so none of them dies with ModuleNotFoundError."""
-    from .conftest import SF_SMOKE
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_GRAFT_DRIVER_MEM"] = "2g"  # a second JVM beside the suite's
     script = _FOREIGN_CWD_SCRIPT.format(
-        repo=repo, keys=PYTHON_WORKER_KEYS, sf=SF_SMOKE
+        repo=REPO, keys=PYTHON_WORKER_KEYS, sf=SF_SMOKE
     )
-    # The child's JVM inherits the child's output, so it goes to a file
-    # rather than a pipe that a lingering JVM could hold open. The child
-    # leads its own process group, killed whole once it exits or runs
-    # past its limit (about 5x its ~25 s on 4 cores).
-    log = tmp_path / "child.log"
-    with open(log, "w") as out:
-        proc = subprocess.Popen(
-            [sys.executable, "-c", script],
-            cwd=tmp_path,
-            env=env,
-            stdin=subprocess.DEVNULL,
-            stdout=out,
-            stderr=subprocess.STDOUT,
-            start_new_session=True,
-        )
-        try:
-            returncode = proc.wait(timeout=120)
-        except subprocess.TimeoutExpired:
-            returncode = None
-        finally:
-            try:
-                os.killpg(proc.pid, signal.SIGKILL)
-            except ProcessLookupError:
-                pass
-            proc.wait()
-    assert returncode == 0, log.read_text()[-3000:]
+    # limit: about 5x its ~25 s on 4 cores
+    run_child([sys.executable, "-c", script], timeout=120, env=env, cwd=tmp_path)
 
 
 def test_corpus_harnesses_are_shared():
@@ -398,3 +358,97 @@ def test_corpus_harnesses_are_shared():
             if name != home and re.search(rx, src, re.M)
         ]
     assert not offenders, "\n".join(offenders)
+
+
+def test_gate_helpers_are_shared():
+    """Child drivers and default-config baselines come from
+    tests/spill_harness.py (``run_child``, ``run_harness``,
+    ``baseline_digest``, ``conf_patch``). No other file under tests/
+    may launch ``sys.executable`` through ``subprocess.run``/``Popen``
+    (piped output a JVM grandchild holds open turns a clean exit into
+    a timeout), call ``tempfile.mktemp``, or define its own
+    ``_baseline_cache`` or ``_conf_patch``. The check walks the AST, so
+    text inside a child script's string literal does not count."""
+    import ast
+    import glob
+
+    def offences(tree):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in ("run", "Popen") and any(
+                    isinstance(n, ast.Attribute)
+                    and n.attr == "executable"
+                    and getattr(n.value, "id", None) == "sys"
+                    for n in ast.walk(node)
+                ):
+                    yield node.lineno, "launches sys.executable"
+                if name == "mktemp" and (
+                    isinstance(f, ast.Name) or getattr(f.value, "id", None) == "tempfile"
+                ):
+                    yield node.lineno, "calls tempfile.mktemp"
+            elif isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                if node.name in ("_conf_patch", "conf_patch"):
+                    yield node.lineno, f"defines {node.name}"
+            elif isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+                if node.id == "_baseline_cache":
+                    yield node.lineno, "defines _baseline_cache"
+
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(os.path.dirname(__file__), "*.py"))):
+        name = os.path.basename(path)
+        if name == "spill_harness.py":
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), filename=path)
+        offenders += [f"{name}:{line}: {what}" for line, what in offences(tree)]
+    assert not offenders, "\n".join(offenders)
+
+
+# A child that starts a ``sleep 60`` grandchild sharing its stdout and
+# stderr, reports the grandchild's pid on both, then sleeps argv[1] s.
+_GRANDCHILD_SCRIPT = """
+import subprocess, sys, time
+pid = subprocess.Popen(["sleep", "60"]).pid
+print(pid, flush=True)
+print(pid, file=sys.stderr, flush=True)
+time.sleep(float(sys.argv[1]))
+"""
+
+
+def _gone(pid: int, within: float = 5.0) -> bool:
+    """True once ``pid`` no longer runs (exited, or a zombie)."""
+    deadline = time.monotonic() + within
+    while True:
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                state = f.read().rsplit(")", 1)[1].split()[0]
+        except OSError:
+            return True
+        if state in ("Z", "X") or time.monotonic() > deadline:
+            return state in ("Z", "X")
+        time.sleep(0.1)
+
+
+def test_run_child_returns_when_the_child_exits_despite_a_grandchild():
+    """A grandchild holding the child's stdout must not stall the
+    runner: it returns the child's output as soon as the child exits
+    0, and the grandchild dies with the child's process group."""
+    t0 = time.monotonic()
+    out = run_child([sys.executable, "-c", _GRANDCHILD_SCRIPT, "0"], timeout=30)
+    assert time.monotonic() - t0 < 10
+    pid = int(out.split()[0])
+    assert _gone(pid), f"grandchild {pid} outlived run_child"
+
+
+def test_run_child_kills_the_group_on_timeout():
+    """A child that runs past its limit fails within a few seconds of
+    it, with the stderr tail in the message, and takes its grandchild
+    down with it."""
+    t0 = time.monotonic()
+    with pytest.raises(AssertionError, match="timed out") as err:
+        run_child([sys.executable, "-c", _GRANDCHILD_SCRIPT, "60"], timeout=2)
+    assert time.monotonic() - t0 < 10
+    pid = int(str(err.value).split()[-1])
+    assert _gone(pid), f"grandchild {pid} outlived run_child"

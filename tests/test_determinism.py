@@ -10,8 +10,9 @@ degenerate everything-in-one-task layout, a distinct failure mode:
 code that accidentally relies on intra-partition arrival order can
 pass at 7 and diverge at 1, where EVERY row arrives in one scan
 order) — and requires results bit-identical to the default-config
-run. Float sums that ride IEEE-addition would fail this; the
-decimal/integer formulations the engine uses must not."""
+run (equal canonical digests). Float sums that ride IEEE-addition
+would fail this; the decimal/integer formulations the engine uses
+must not."""
 
 from __future__ import annotations
 
@@ -20,6 +21,7 @@ import pytest
 from uchr_scetl_spark import clear_caches, load_registry
 
 from .conftest import SF_SMOKE
+from .spill_harness import baseline_digest, canonical_digest, conf_patch
 
 REGISTRY = load_registry()
 
@@ -167,41 +169,15 @@ KEYS = [
 ]
 
 
-def _rows(spark, key):
-    df = REGISTRY[key].fn(spark, SF_SMOKE)
-    cols = sorted(df.columns)
-    rows = [tuple(r[c] for c in cols) for r in df.select(*cols).collect()]
-    # canonical order only (equality still compares raw values): the
-    # (is-None, str) key tolerates NULL cells, which plain tuple
-    # comparison cannot (etl_feature_pointintime's first-order lag)
-    return sorted(
-        rows, key=lambda t: tuple((v is None, str(v)) for v in t)
-    )
-
-
-# default-config rows per key, computed once and shared by the 7- and
-# 1-partition parametrizations (halves the sweep's Spark work)
-_baseline_cache: dict[str, list] = {}
-
-
-def _baseline(spark, key):
-    if key not in _baseline_cache:
-        _baseline_cache[key] = _rows(spark, key)
-    return _baseline_cache[key]
-
-
 @pytest.mark.parametrize("nparts", ["7", "1"])
 @pytest.mark.parametrize("key", KEYS)
 def test_result_invariant_under_partition_count(spark, key, nparts):
-    baseline = _baseline(spark, key)
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", nparts)
-        assert _rows(spark, key) == baseline, (
-            f"{key} changed results under shuffle.partitions={nparts}"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    baseline = baseline_digest(spark, key)
+    with conf_patch(spark, {"spark.sql.shuffle.partitions": nparts}):
+        got = canonical_digest(REGISTRY[key].fn(spark, SF_SMOKE))
+    assert got == baseline, (
+        f"{key} changed results under shuffle.partitions={nparts}"
+    )
 
 
 def test_kmeans_assign_invariant_with_fresh_centroids(spark):
@@ -211,15 +187,15 @@ def test_kmeans_assign_invariant_with_fresh_centroids(spark):
     seed fetch, both Lloyd updates, final stats — recomputes under
     shuffle.partitions=7 and must still be bit-identical (exact
     integer arithmetic is the claim)."""
+    fn = REGISTRY["sim_kmeans_assign"].fn
     clear_caches(SF_SMOKE)
-    baseline = _rows(spark, "sim_kmeans_assign")
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    baseline = canonical_digest(fn(spark, SF_SMOKE))
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        clear_caches(SF_SMOKE)
-        assert _rows(spark, "sim_kmeans_assign") == baseline, (
-            "sim_kmeans_assign changed results under shuffle.partitions=7"
-        )
+        with conf_patch(spark, {"spark.sql.shuffle.partitions": "7"}):
+            clear_caches(SF_SMOKE)
+            got = canonical_digest(fn(spark, SF_SMOKE))
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
         clear_caches(SF_SMOKE)
+    assert got == baseline, (
+        "sim_kmeans_assign changed results under shuffle.partitions=7"
+    )

@@ -50,8 +50,7 @@ import pytest
 from uchr_scetl_spark import load_registry
 
 from .conftest import SF_SMOKE
-from .spill_harness import canonical_digest
-from .test_aqe_determinism import _conf_patch
+from .spill_harness import baseline_digest, canonical_digest, conf_patch
 
 REGISTRY = load_registry()
 
@@ -149,20 +148,9 @@ ANSI_KEYS = CODEGEN_KEYS + [
     "agg_approx_percentile",
 ]
 
-_baseline_cache: dict[str, str] = {}
-
-
-def _baseline(spark, key):
-    if key not in _baseline_cache:
-        _baseline_cache[key] = canonical_digest(
-            REGISTRY[key].fn(spark, SF_SMOKE)
-        )
-    return _baseline_cache[key]
-
-
 def _check(spark, key, confs, label):
-    baseline = _baseline(spark, key)
-    with _conf_patch(spark, confs):
+    baseline = baseline_digest(spark, key)
+    with conf_patch(spark, confs):
         got = canonical_digest(REGISTRY[key].fn(spark, SF_SMOKE))
     assert got == baseline, f"{key} changed results under {label}"
 
@@ -203,7 +191,7 @@ def test_ansi_is_the_default_and_the_off_axis_actually_loosens(spark):
         spark.sql("SELECT 1/0 AS x").collect()
     with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
         spark.sql("SELECT CAST('abc' AS INT) AS x").collect()
-    with _conf_patch(spark, ANSI_OFF_CONFS):
+    with conf_patch(spark, ANSI_OFF_CONFS):
         assert spark.sql("SELECT 1/0 AS x").first().x is None
         assert spark.sql("SELECT CAST('abc' AS INT) AS x").first().x is None
 
@@ -233,7 +221,7 @@ def test_arrow_batch_conf_actually_fragments(spark):
         yield pd.DataFrame({"batches": [n], "rows": [rows]})
 
     df = spark.range(0, 100).coalesce(1)
-    with _conf_patch(spark, ARROW_CONFS):
+    with conf_patch(spark, ARROW_CONFS):
         got = df.mapInPandas(count_batches, "batches long, rows long").collect()
     assert got[0].rows == 100
     assert got[0].batches >= 100 // 7, got
@@ -243,7 +231,7 @@ def test_split_conf_actually_fragments(spark):
     """Anti-vacuity: 64KB splits must give the events scan more
     input partitions than files."""
     df = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-    with _conf_patch(spark, SPLIT_CONFS):
+    with conf_patch(spark, SPLIT_CONFS):
         parts = (
             spark.read.parquet(f"{SF_SMOKE}/events.parquet")
             .rdd.getNumPartitions()
@@ -254,7 +242,7 @@ def test_split_conf_actually_fragments(spark):
 def test_row_reader_conf_actually_disables_batching(spark):
     """Anti-vacuity: with the vectorized reader off the scan must not
     be batched (the plan advertises Batched: false)."""
-    with _conf_patch(spark, ROW_READER_CONFS):
+    with conf_patch(spark, ROW_READER_CONFS):
         df = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
         plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Batched: false" in plan, plan[:1200]
@@ -263,7 +251,7 @@ def test_row_reader_conf_actually_disables_batching(spark):
 def test_no_codegen_conf_actually_interprets(spark):
     """Anti-vacuity: under wholeStage=false the executed plan must
     contain no WholeStageCodegen span."""
-    with _conf_patch(spark, NO_CODEGEN_CONFS):
+    with conf_patch(spark, NO_CODEGEN_CONFS):
         df = REGISTRY["fn_math"].fn(spark, SF_SMOKE)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()

@@ -45,21 +45,13 @@ Three gates:
 from __future__ import annotations
 
 import json
-import os
-import subprocess
 import sys
-import tempfile
 import textwrap
 
 import pytest
 
-from uchr_scetl_spark import load_registry
-
-from .conftest import SF_SMOKE
-from .spill_harness import canonical_digest
-
-REGISTRY = load_registry()
-REPO = __file__.rsplit("/", 2)[0]
+from .conftest import REPO
+from .spill_harness import baseline_digest, run_child, run_harness
 
 # representative shapes: iterative/checkpointing (pagerank, bfs,
 # clusters, zorder barrier), shuffle-heavy aggs/joins/windows, banded
@@ -120,15 +112,11 @@ _KILL_SCRIPT = textwrap.dedent(
 
 
 def _run_kill_probe(reliable: bool) -> dict:
-    proc = subprocess.run(
+    stdout = run_child(
         [sys.executable, "-c", _KILL_SCRIPT % {"repo": REPO, "reliable": reliable}],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
         timeout=600,
     )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    return json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(stdout.strip().splitlines()[-1])
 
 
 def test_local_checkpoint_blocks_die_with_their_executor():
@@ -151,19 +139,8 @@ def chaos():
     checkpoints on. (The killer only shoots java processes descended
     from its own harness process, so concurrent sessions — the shared
     pytest one included — are never at risk.)"""
-    out = tempfile.mktemp(suffix=".json", prefix="uchr_chaos_gate_")
-    env = dict(os.environ)
-    env["SPARK_GRAFT_MASTER"] = "local-cluster[2,8,4096]"
-    env["PYTHONPATH"] = REPO + (
-        ":" + env["PYTHONPATH"] if env.get("PYTHONPATH") else ""
-    )
-    proc = subprocess.run(
+    return run_harness(
         [
-            sys.executable,
-            "-m",
-            "tests.spill_harness",
-            out,
-            SF_SMOKE,
             "--chaos-kill",
             "8",
             "--conf",
@@ -172,15 +149,8 @@ def chaos():
             "spark.uchr.reliableCheckpoint=true",
             *CHAOS_KEYS,
         ],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
-        timeout=1800,
-        env=env,
+        master="local-cluster[2,8,4096]",
     )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    with open(out) as f:
-        return json.load(f)
 
 
 def test_chaos_kills_actually_landed(chaos):
@@ -191,7 +161,7 @@ def test_chaos_kills_actually_landed(chaos):
 def test_key_is_bit_identical_under_executor_loss(key, spark, chaos):
     got = chaos["digests"][key]
     assert not got.startswith("ERR:"), f"{key} raised under chaos: {got}"
-    want = canonical_digest(REGISTRY[key].fn(spark, SF_SMOKE))
+    want = baseline_digest(spark, key)
     assert got == want, f"{key} changed results under executor loss"
 
 
@@ -218,29 +188,9 @@ def pyworker_chaos():
     and must be retried. The killer only shoots descendants of its
     own harness process, so the shared pytest session's daemons are
     never at risk."""
-    out = tempfile.mktemp(suffix=".json", prefix="uchr_pywk_gate_")
-    env = dict(os.environ)
-    env["SPARK_GRAFT_MASTER"] = "local[32,4]"
-    proc = subprocess.run(
-        [
-            sys.executable,
-            "-m",
-            "tests.spill_harness",
-            out,
-            SF_SMOKE,
-            "--chaos-kill-python",
-            "4",
-            *PYWORKER_KEYS,
-        ],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
-        timeout=1800,
-        env=env,
+    return run_harness(
+        ["--chaos-kill-python", "4", *PYWORKER_KEYS], master="local[32,4]"
     )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    with open(out) as f:
-        return json.load(f)
 
 
 def test_python_worker_kills_actually_landed(pyworker_chaos):
@@ -253,5 +203,5 @@ def test_key_is_bit_identical_under_python_worker_crashes(
 ):
     got = pyworker_chaos["digests"][key]
     assert not got.startswith("ERR:"), f"{key} raised under pyworker chaos: {got}"
-    want = canonical_digest(REGISTRY[key].fn(spark, SF_SMOKE))
+    want = baseline_digest(spark, key)
     assert got == want, f"{key} changed results under python worker crashes"

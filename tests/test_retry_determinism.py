@@ -56,20 +56,13 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 import textwrap
 
 import pytest
 
-from uchr_scetl_spark import load_registry
-
-from .conftest import SF_SMOKE
-from .spill_harness import canonical_digest
+from .conftest import REPO
+from .spill_harness import baseline_digest, run_child, run_harness
 from .test_determinism import KEYS
-
-REGISTRY = load_registry()
-
-REPO = __file__.rsplit("/", 2)[0]
 
 # local-cluster runs pay a ~20 s two-JVM-executor startup and slower
 # per-key execution, so the committed gate uses a representative
@@ -97,39 +90,19 @@ LC_KEYS = [
 ]
 
 
-def _run_harness(args: list[str], master: str) -> dict:
-    out = tempfile.mktemp(suffix=".json", prefix="uchr_retry_gate_")
-    env = dict(os.environ)
-    env["SPARK_GRAFT_MASTER"] = master
-    env["PYTHONPATH"] = REPO + (
-        ":" + env["PYTHONPATH"] if env.get("PYTHONPATH") else ""
-    )
-    proc = subprocess.run(
-        [sys.executable, "-m", "tests.spill_harness", out, SF_SMOKE, *args],
-        cwd=REPO,
-        capture_output=True,
-        text=True,
-        timeout=1800,
-        env=env,
-    )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    with open(out) as f:
-        return json.load(f)
-
-
 @pytest.fixture(scope="module")
 def wrapped():
     """Wrapped loads, NO fault — the comparison base for the retry
     axis and the Arrow-fidelity anchor. Same retry-capable master as
     the fault run so only the fault differs."""
-    return _run_harness(["--wrap-loads", *KEYS], master="local[32,4]")
+    return run_harness(["--wrap-loads", *KEYS], master="local[32,4]")
 
 
 @pytest.fixture(scope="module")
 def retried():
     """Wrapped loads WITH the first-attempt fault: every third scan
     partition fails its attempt 0 and is re-executed."""
-    return _run_harness(["--retry-fault", *KEYS], master="local[32,4]")
+    return run_harness(["--retry-fault", *KEYS], master="local[32,4]")
 
 
 def test_retries_actually_happened(wrapped, retried):
@@ -157,7 +130,7 @@ def test_load_wrapper_is_value_faithful(key, spark, wrapped):
     the retry comparison to the registry's canonical results."""
     got = wrapped["digests"][key]
     assert not got.startswith("ERR:"), f"{key} raised wrapped: {got}"
-    want = canonical_digest(REGISTRY[key].fn(spark, SF_SMOKE))
+    want = baseline_digest(spark, key)
     assert got == want, f"{key} changed results through the load wrapper"
 
 
@@ -165,7 +138,7 @@ def test_load_wrapper_is_value_faithful(key, spark, wrapped):
 def lc():
     """Cross-section sweep under a real two-executor local-cluster
     (multi-process shuffle, serialized broadcast, network fetch)."""
-    return _run_harness(
+    return run_harness(
         ["--conf", f"spark.executorEnv.PYTHONPATH={REPO}", *LC_KEYS],
         master="local-cluster[2,8,4096]",
     )
@@ -175,7 +148,7 @@ def lc():
 def test_key_is_bit_identical_across_process_boundaries(key, spark, lc):
     got = lc["digests"][key]
     assert not got.startswith("ERR:"), f"{key} raised on local-cluster: {got}"
-    want = canonical_digest(REGISTRY[key].fn(spark, SF_SMOKE))
+    want = baseline_digest(spark, key)
     assert got == want, f"{key} changed results on local-cluster"
 
 
@@ -349,14 +322,7 @@ def test_speculation_clone_races_straggler_and_result_is_exact(tmp_path):
         """
     )
     with fake_two_host_cluster(str(tmp_path)) as url:
-        proc = subprocess.run(
-            [sys.executable, "-c", script, url],
-            cwd=REPO,
-            capture_output=True,
-            text=True,
-            timeout=600,
-        )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
+        stdout = run_child([sys.executable, "-c", script, url], timeout=600)
+    out = json.loads(stdout.strip().splitlines()[-1])
     assert out["exact"] is True, out
     assert out["speculative_runs"] > 0, out

@@ -41,45 +41,17 @@ per run.
 
 from __future__ import annotations
 
-import json
-import subprocess
-import sys
-import tempfile
-
 import pytest
 
-from uchr_scetl_spark import load_registry
-
-from .conftest import SF_SMOKE
-from .spill_harness import canonical_digest
+from .spill_harness import baseline_digest, run_harness
 from .test_determinism import KEYS
-
-REGISTRY = load_registry()
 
 
 @pytest.fixture(scope="module")
 def spilled():
     """One subprocess run of the forced-spill session over the full
     cross-section; returns the parsed result JSON."""
-    out = tempfile.mktemp(suffix=".json", prefix="uchr_spill_gate_")
-    proc = subprocess.run(
-        [
-            sys.executable,
-            "-m",
-            "tests.spill_harness",
-            out,
-            SF_SMOKE,
-            "--spill",
-            *KEYS,
-        ],
-        cwd=__file__.rsplit("/", 2)[0],
-        capture_output=True,
-        text=True,
-        timeout=1800,
-    )
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    with open(out) as f:
-        return json.load(f)
+    return run_harness(["--spill", *KEYS])
 
 
 def test_spill_machinery_engaged(spilled):
@@ -103,5 +75,5 @@ def test_key_is_bit_identical_under_forced_spill(key, spark, spilled):
     bit-exact (canonical_digest hashes floats by IEEE bit pattern)."""
     got = spilled["digests"][key]
     assert not got.startswith("ERR:"), f"{key} raised under spill: {got}"
-    want = canonical_digest(REGISTRY[key].fn(spark, SF_SMOKE))
+    want = baseline_digest(spark, key)
     assert got == want, f"{key} changed results under forced spill"

@@ -34,12 +34,13 @@ VACUITY.json is the round artifact the judge reads.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
 import duckdb
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from uchr_scetl_spark import load_registry  # noqa: E402
 from uchr_scetl_spark.schemas import TABLES  # noqa: E402
