@@ -8,6 +8,12 @@ of every partition, no Arrow/driver transfer), so timings measure the
 engine's plans, not result serialisation. Tables are read through the
 normal io.load path — no caching — so every query's timing includes its
 parquet scan, the same way the driver would run it cold.
+
+This is the repo's one key runner: ``warm_up``, ``force`` and
+``time_keys`` also serve ``tools/abench.py`` (warm reps) and
+``tools/scale_growth.py`` (growth exponents), so every tool times the
+same region — key construction plus the noop write — in a session
+warmed the same way.
 """
 
 from __future__ import annotations
@@ -17,6 +23,7 @@ import os
 import re
 import sys
 import time
+from typing import Iterable, Iterator
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -43,14 +50,31 @@ def main() -> int:
 
     registry = load_registry()
     spark = get_session("uchr-bench")
-    # JVM/session warmup so the first measured queries don't absorb
-    # one-time costs that a long-running cluster pays exactly once:
-    # janino compilation of whole-stage-codegen frames, Parquet
-    # vectorized-reader classloading, shuffle/sort/join operator
-    # classes, and the Arrow python-worker pool.  The warmup runs a
-    # compound plan over the tiny sf0.001 corpus (never the measured
-    # sf_dir) exercising scan → filter → join → hash agg → window →
-    # sort and one pandas-UDF batch.
+    warm_up(spark)
+
+    keys = [k for k in sorted(registry) if not only or k in only]
+    timings: dict[str, float] = {}
+    for key, (dt,) in time_keys(spark, registry, keys, sf_dir):
+        timings[key] = dt
+        if dt >= 0:
+            print(f"# {key}: {dt:.3f}s", file=sys.stderr)
+
+    lines = output_lines(timings, sf, sorted(registry)[:50])
+    # --full-only keeps just the full per-key line
+    for line in lines[1:2] if full_only else lines:
+        print(line)
+    return 0
+
+
+def warm_up(spark) -> None:
+    """JVM/session warmup so the first measured queries don't absorb
+    one-time costs that a long-running cluster pays exactly once:
+    janino compilation of whole-stage-codegen frames, Parquet
+    vectorized-reader classloading, shuffle/sort/join operator
+    classes, and the Arrow python-worker pool.  The warmup runs a
+    compound plan over the tiny sf0.001 corpus (never the measured
+    sf_dir) exercising scan → filter → join → hash agg → window →
+    sort and one pandas-UDF batch."""
     force(spark.range(1000).selectExpr("sum(id) AS s"))
     try:
         from pyspark.sql import Window
@@ -73,7 +97,7 @@ def main() -> int:
         from pyspark.sql.functions import pandas_udf
 
         # NOTE: no type hints here — string annotations resolve against
-        # module globals, and `pd` is local to main(), which makes
+        # module globals, and `pd` is local to warm_up(), which makes
         # pandas_udf raise PySparkNotImplementedError
         @pandas_udf("double")
         def _warm(v):
@@ -133,91 +157,56 @@ def main() -> int:
     except Exception as exc:  # warmup must never fail the bench
         print(f"# BENCH WARMUP SKIPPED: {exc!r}", file=sys.stderr)
 
-    timings: dict[str, float] = {}
-    total = 0.0
-    for key, spec in sorted(registry.items()):
-        if only and key not in only:
-            continue
-        t0 = time.perf_counter()
-        try:
-            force(spec.fn(spark, sf_dir))
-        except Exception as exc:  # record the failure, keep benching
-            print(f"# BENCH ERROR {key}: {exc!r}", file=sys.stderr)
-            timings[key] = -1.0
-            continue
-        dt = round(time.perf_counter() - t0, 3)
-        timings[key] = dt
-        total += dt
-        print(f"# {key}: {dt:.3f}s", file=sys.stderr)
 
-    # Driver-capture shape (round-11 verdict #6): the driver keeps only
-    # the LAST 2000 chars of stdout, so the ~10 KB full per-key JSON
-    # always truncates mid-map and its artifact "parsed" field has been
-    # null every round. Print a compact self-contained summary line
-    # FIRST (per the verdict's prescription, covers any head capture)
-    # and again LAST (guaranteed inside the 2000-char tail) around the
-    # unchanged full JSON line; the committed BENCH_LOCAL.json remains
-    # the full-map record.
+def time_keys(
+    spark, registry, keys: Iterable[str], sf_dir: str, reps: int = 1
+) -> Iterator[tuple[str, list[float]]]:
+    """Yield ``(key, seconds per rep)`` for each key, reps back to
+    back. The timed region is key construction (with the eager jobs
+    a key runs while it builds) plus the noop write. A rep that raises
+    is recorded as -1.0 with a ``# BENCH ERROR`` line on stderr, and
+    the run goes on."""
+    for key in keys:
+        times = []
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            try:
+                force(registry[key].fn(spark, sf_dir))
+            except Exception as exc:  # record the failure, keep benching
+                print(f"# BENCH ERROR {key}: {exc!r}", file=sys.stderr)
+                times.append(-1.0)
+                continue
+            times.append(round(time.perf_counter() - t0, 3))
+        yield key, times
+
+
+def output_lines(
+    timings: dict[str, float], sf: float, sample: list[str]
+) -> list[str]:
+    """bench.py's three stdout lines. Only the last 2,000 chars of
+    stdout are kept, so the ~10 KB full per-key line always truncates;
+    two compact summary lines bracket it. The FIRST carries the 10
+    slowest keys. The LAST carries per-key seconds, 2 decimals, for
+    ``sample`` (the oracle sample: the 50 alphabetically-first registry
+    keys) plus the 8 slowest keys of the whole run, ~1.75 KB.
+    ``value`` is the total over ALL keys in every line."""
     ok = {k: v for k, v in timings.items() if v >= 0}
-    summary = json.dumps(
-        {
-            "metric": "total_query_wall_seconds",
-            "value": round(total, 3),
-            "unit": "sec",
-            "sf": sf,
-            "n_keys": len(timings),
-            "n_errors": len(timings) - len(ok),
-            "slowest": {
-                k: ok[k]
-                for k in sorted(ok, key=ok.get, reverse=True)[:10]
-            },
-            "summary": True,
-        }
-    )
-    if not full_only:
-        print(summary)
-    print(
+    slowest = sorted(ok, key=ok.get, reverse=True)
+    head = {
+        "metric": "total_query_wall_seconds",
+        "value": round(sum(ok.values()), 3),
+        "unit": "sec",
+    }
+    summary = {**head, "sf": sf, "n_keys": len(timings), "n_errors": len(timings) - len(ok)}
+    tail = [k for k in sample if k in timings]
+    tail += [k for k in slowest[:8] if k not in tail]
+    return [
+        json.dumps({**summary, "slowest": {k: ok[k] for k in slowest[:10]}, "summary": True}),
+        json.dumps({**head, "queries": timings, "sf": sf}),
         json.dumps(
-            {
-                "metric": "total_query_wall_seconds",
-                "value": round(total, 3),
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-            }
-        )
-    )
-    if not full_only:
-        # Round-15 verdict item 1: the driver keeps only the LAST 2000
-        # chars of stdout, so the full 309-key map above always
-        # truncates and PERF per_query / scaling came back empty every
-        # round.  The FINAL line is a compact summary carrying per-key
-        # seconds for exactly the driver's oracle sample (the 50
-        # alphabetically-first registry keys, 2 decimals — ~1.5 KB,
-        # fits the tail) so the driver's per-query comparison and the
-        # low-core scaling ratios populate.  `value` stays the total
-        # over ALL keys; the full map line above is unchanged and
-        # remains the committed BENCH_LOCAL.json record.
-        sample = sorted(registry)[:50]
-        print(
-            json.dumps(
-                {
-                    "metric": "total_query_wall_seconds",
-                    "value": round(total, 3),
-                    "unit": "sec",
-                    "sf": sf,
-                    "n_keys": len(timings),
-                    "n_errors": len(timings) - len(ok),
-                    "queries": {
-                        k: round(timings[k], 2)
-                        for k in sample
-                        if k in timings
-                    },
-                    "summary": True,
-                }
-            )
-        )
-    return 0
+            {**summary, "queries": {k: round(timings[k], 2) for k in tail}, "summary": True}
+        ),
+    ]
 
 
 if __name__ == "__main__":

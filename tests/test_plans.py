@@ -377,10 +377,10 @@ def test_bpe_merge_rounds_scan_corpus_once(spark):
         plan = df._jdf.queryExecution().executedPlan().toString()
         # round 15: training runs eagerly inside _bpe_train (R
         # bounded 1-row argmax collects over the cached vocabulary,
-        # memoized per corpus), so the RETURNED merge table is a
-        # union of one-row JVM literal relations — the corpus appears
-        # nowhere in the result plan and nothing shuffles or joins to
-        # produce three constant rows
+        # memoized per corpus), so the RETURNED merge table is one
+        # JVM literal relation (exprs.literal_rows_df) — the corpus
+        # appears nowhere in the result plan and nothing shuffles or
+        # joins to produce three constant rows
         assert "documents.parquet" not in plan, plan
         # only the 3-row ORDER BY round sort may exchange — no
         # aggregation/join shuffle survives into the result plan

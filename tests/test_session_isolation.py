@@ -187,3 +187,34 @@ def test_reliable_mode_refuses_driver_local_dir_on_cluster_master(spark):
     # the raise must have happened BEFORE any dir was installed on the
     # shared context (a half-applied fallback would poison later tests)
     assert sc.getCheckpointDir() is None
+
+
+# Keys that run SQL text over corpus tables through ``spark.sql``.
+SQL_TEXT_KEYS = [
+    "agg_grouping_sets",
+    "sql_cte_pipeline",
+    "sql_group_by_all",
+    "sql_parameterized",
+    "sql_pipe_syntax",
+    "sql_recursive_cte",
+    "udtf_explode_custom",
+]
+
+
+def test_sql_text_keys_leave_no_view_in_the_session(spark):
+    """Building a key must not register anything in the caller's
+    catalog. A fixed-name temp view leaks into the session and races:
+    two threads building the same key over different corpora replace
+    each other's view between registration and analysis, so one can
+    read the other's corpus. A fresh session (shared SparkContext)
+    starts with no views that earlier tests left behind."""
+    from uchr_scetl_spark import load_registry
+
+    from .conftest import SF_SMOKE
+
+    session = spark.newSession()
+    registry = load_registry()
+    before = session.catalog.listTables()
+    for key in SQL_TEXT_KEYS:
+        registry[key].fn(session, SF_SMOKE)
+    assert session.catalog.listTables() == before

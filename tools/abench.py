@@ -1,10 +1,13 @@
 """A/B timing harness: run the named registry keys R times each inside
 ONE warmed session and print per-rep wall times plus min/median.
 
-Unlike bench.py (cold, one shot per key — matches how the driver runs),
-this exists to separate plan cost from machine noise when iterating on
-a single operator: the min over reps is stable under background load,
-and back-to-back reps in one process share identical JVM/codegen state.
+The session warm-up and the timed region (key construction plus the
+noop write) are bench.py's own ``warm_up``/``time_keys``; only the
+rep count differs. Where bench.py takes one cold shot per key, this exists to separate plan cost from machine noise
+when iterating on a single operator: the min over reps is stable under
+background load, and back-to-back reps in one process share identical
+JVM/codegen state. A rep that raises is recorded as -1.0 in ``reps``
+and left out of min/median.
 Keys whose cost lives in a per-session memo (dedup_* caches) are only
 meaningfully measured on rep 1 — later reps hit the memo; interpret
 accordingly (or use bench.py for those).
@@ -32,10 +35,10 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_keys, warm_up  # noqa: E402
 from uchr_scetl_spark import get_session, load_registry  # noqa: E402
 
 
@@ -68,29 +71,15 @@ def main() -> int:
         keys.extend(k for k in ranked[:slowest] if k not in keys)
     registry = load_registry()
     spark = get_session("uchr-abench")
-    spark.range(1000).selectExpr("sum(id)").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_up(spark)
     results = {}
-    for key in keys:
-        times = []
-        for r in range(reps):
-            t0 = time.perf_counter()
-            registry[key].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            times.append(time.perf_counter() - t0)
-        results[key] = {
-            "min": round(min(times), 3),
-            "med": round(statistics.median(times), 3),
-            "reps": [round(t, 3) for t in times],
-        }
+    for key, times in time_keys(spark, registry, keys, sf_dir, reps):
+        # error reps stay in "reps" as -1.0; min/med cover the others
+        ok = [t for t in times if t >= 0] or [-1.0]
+        lo, med = min(ok), round(statistics.median(ok), 3)
+        results[key] = {"min": lo, "med": med, "reps": times}
         reps_s = " ".join(f"{t:6.2f}" for t in times)
-        print(
-            f"{key:30s} min={min(times):6.2f} med={statistics.median(times):6.2f}"
-            f"  reps: {reps_s}",
-            flush=True,
-        )
+        print(f"{key:30s} min={lo:6.2f} med={med:6.2f}  reps: {reps_s}", flush=True)
     if json_out:
         with open(json_out, "w") as fh:
             json.dump(

@@ -7,7 +7,13 @@ aggregation, codegen spans — so plan quality is reviewable as text
 without rerunning Spark. tests/test_plans.py asserts the same
 properties mechanically; this document is the human-readable twin.
 
+``--dump`` writes the whole captured plan of named keys instead:
+``OUTDIR/<key>_<SUFFIX>.txt`` per key, the before/after plan artifacts
+optimization rounds commit under ``plans/`` so plan-shape claims are
+checkable without running Spark.
+
 Usage:  python tools/plan_audit.py [sf_dir]   (writes PLANS.md)
+        python tools/plan_audit.py --dump OUTDIR SUFFIX [sf_dir] key...
 """
 
 from __future__ import annotations
@@ -697,7 +703,31 @@ AUDITS: dict[str, tuple[str, list[str]]] = {
 }
 
 
+def formatted_plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def dump(outdir: str, suffix: str, rest: list[str]) -> int:
+    sf_dir = "/root/testdata/sf0.1"
+    if rest and os.path.isdir(rest[0]):
+        sf_dir, rest = rest[0], rest[1:]
+    os.makedirs(outdir, exist_ok=True)
+    registry = load_registry()
+    spark = get_session("uchr-plan-audit")
+    for key in rest:
+        path = os.path.join(outdir, f"{key}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(formatted_plan(registry[key].fn(spark, sf_dir)))
+        print(f"wrote {path}", file=sys.stderr)
+    return 0
+
+
 def main() -> int:
+    if sys.argv[1:2] == ["--dump"]:
+        return dump(sys.argv[2], sys.argv[3], sys.argv[4:])
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     registry = load_registry()
     spark = get_session("uchr-plan-audit")
@@ -727,11 +757,7 @@ def main() -> int:
     SPECIAL = {"etl_observe_metrics": _observed_load}
 
     for key, (claim, patterns) in AUDITS.items():
-        df = SPECIAL.get(key, registry[key].fn)(spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = formatted_plan(SPECIAL.get(key, registry[key].fn)(spark, sf_dir))
         lines = plan.splitlines()
         evidence: list[str] = []
         for pat in patterns:

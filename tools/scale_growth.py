@@ -28,9 +28,12 @@ range fits ~1.1; anything >= 1.4 is flagged super-linear and needs a
 fix or a documented cap proof.
 
 Keys are run key-outer (all factors back-to-back per key) so every
-key sees the same memo-warm state in each dir, and the whole run
-starts with a warmup pass over a throwaway 1x dir so codegen/Arrow
-one-time costs are paid before any measurement.
+key sees the same memo-warm state in each dir. The session gets
+bench.py's ``warm_up``, then one pass of every key over a throwaway 1x
+dir, so codegen/Arrow one-time costs are paid before any measurement;
+every rep is bench.py's ``time_keys`` region (construction plus the
+noop write). A rep that raises reads -1.0 and is left out of ``min``;
+an exponent over a factor with no successful rep is null.
 
 Usage: python tools/scale_growth.py [-r REPS] [--factors 1,3,10]
            [--json OUT] [--longtail F] [sf_dir] [key ...]
@@ -56,6 +59,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_keys, warm_up  # noqa: E402
 from uchr_scetl_spark import clear_caches, get_session, load_registry  # noqa: E402
 from uchr_scetl_spark.sources.corpus_scale import extend_corpus  # noqa: E402
 
@@ -63,10 +67,12 @@ SEED = 42
 DEFAULT_FACTORS = [1, 3, 10]
 
 
-def corpus_dir(spark, sf_dir: str, factor: int, longtail: float = 0.0) -> str:
+def corpus_dir(
+    spark, sf_dir: str, factor: int, longtail: float = 0.0, label: str = ""
+) -> str:
     base = os.path.basename(os.path.normpath(sf_dir))
     tag = f"_lt{int(longtail * 100)}" if longtail else ""
-    out = f"/tmp/uchr_scale_{base}_{factor}x{tag}_seed{SEED}"
+    out = f"/tmp/uchr_scale_{base}_{label or f'{factor}x{tag}'}_seed{SEED}"
     marker = os.path.join(out, "_UCHR_COMPLETE")
     if os.path.exists(marker):
         return out
@@ -83,14 +89,18 @@ def corpus_dir(spark, sf_dir: str, factor: int, longtail: float = 0.0) -> str:
     return out
 
 
-def fit_exponent(factors: list[int], walls: list[float]) -> float:
+def fit_exponent(factors: list[int], walls: list[float]) -> float | None:
+    """Least-squares log-log slope, rounded to 3 places; None when a
+    factor has no successful rep (wall -1.0)."""
+    if min(walls) < 0:
+        return None
     xs = [math.log(f) for f in factors]
     ys = [math.log(max(w, 1e-6)) for w in walls]
     n = len(xs)
     mx = sum(xs) / n
     my = sum(ys) / n
     denom = sum((x - mx) ** 2 for x in xs)
-    return sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / denom
+    return round(sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / denom, 3)
 
 
 def abench_keys() -> list[str]:
@@ -127,50 +137,46 @@ def main() -> int:
     keys = list(args) or abench_keys()
 
     spark = get_session("uchr-scale-growth")
+    warm_up(spark)
     registry = load_registry()
     unknown = [k for k in keys if k not in registry]
     if unknown:
         raise SystemExit(f"unknown keys: {unknown}")
 
     dirs = {f: corpus_dir(spark, sf_dir, f, longtail) for f in factors}
-    # warmup on a throwaway 1x dir: pays codegen/Arrow/classloading
-    # once, and (because memos key on the dir) leaves every measured
-    # dir's memos COLD so rep 1 captures each dir's build fairly
-    warm = f"/tmp/uchr_scale_{os.path.basename(os.path.normpath(sf_dir))}_warm_seed{SEED}"
-    if not os.path.exists(os.path.join(warm, "_UCHR_COMPLETE")):
-        shutil.rmtree(warm, ignore_errors=True)
-        extend_corpus(spark, sf_dir, 1, warm, seed=SEED)
-        with open(os.path.join(warm, "_UCHR_COMPLETE"), "w") as f:
-            f.write("warmup\n")
-    for key in keys:
-        registry[key].fn(spark, warm).write.format("noop").mode("overwrite").save()
+    # per-key warm pass on a throwaway 1x dir: pays each key's
+    # codegen/classloading once, and (because memos key on the dir)
+    # leaves every measured dir's memos COLD so rep 1 captures each
+    # dir's build fairly
+    warm = corpus_dir(spark, sf_dir, 1, label="warm")
+    for _ in time_keys(spark, registry, keys, warm):
+        pass
     print(f"# warmup done ({len(keys)} keys)", flush=True)
 
     results: dict[str, dict] = {}
     for key in keys:
         row: dict = {"factors": {}}
         for f in factors:
-            walls = []
-            for _ in range(reps):
-                t0 = time.time()
-                registry[key].fn(spark, dirs[f]).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                walls.append(round(time.time() - t0, 3))
+            # a rep that raised reads -1.0; "min" covers the others
+            [(_, walls)] = time_keys(spark, registry, [key], dirs[f], reps)
             row["factors"][str(f)] = {
                 "reps": walls,
-                "min": min(walls),
+                "min": min([w for w in walls if w >= 0] or [-1.0]),
                 "cold": walls[0],
             }
         mins = [row["factors"][str(f)]["min"] for f in factors]
         colds = [row["factors"][str(f)]["cold"] for f in factors]
-        row["exp_warm"] = round(fit_exponent(factors, mins), 3)
-        row["exp_cold"] = round(fit_exponent(factors, colds), 3)
+        row["exp_warm"] = fit_exponent(factors, mins)
+        row["exp_cold"] = fit_exponent(factors, colds)
         results[key] = row
         print(
             f"{key:36s} "
             + "  ".join(f"{f}x:{m:6.2f}s" for f, m in zip(factors, mins))
-            + f"  exp_warm={row['exp_warm']:+.2f} exp_cold={row['exp_cold']:+.2f}",
+            + "  "
+            + " ".join(
+                f"{e}=" + ("n/a" if row[e] is None else f"{row[e]:+.2f}")
+                for e in ("exp_warm", "exp_cold")
+            ),
             flush=True,
         )
 
@@ -194,7 +200,7 @@ def main() -> int:
                 sort_keys=True,
             )
         print(f"# wrote {json_out}", flush=True)
-    flagged = {k: v["exp_warm"] for k, v in results.items() if v["exp_warm"] >= 1.4}
+    flagged = {k: v["exp_warm"] for k, v in results.items() if (v["exp_warm"] or 0) >= 1.4}
     if flagged:
         print(f"# SUPER-LINEAR (exp_warm >= 1.4): {flagged}", flush=True)
     return 0

@@ -49,16 +49,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register the ten tables as temp views (SQL entry point, §3.3)."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(prefix + name)
-
-
 def _schema_of(schema):
     return LOGICAL[schema] if isinstance(schema, str) else schema
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..exprs import literal_rows_df
 from ..io import load
 from ..memo import Memo
 from ..registry import query
@@ -1043,11 +1044,8 @@ def text_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     in BOTH engines (['a','a','a'] → ['aa','a'], leftmost-first), and
     the doubled separator stops adjacent matches sharing characters.
     The oracle unrolls the identical loop as chained CTEs."""
-    _, per_round = _bpe_train(spark, sf_dir)
-    out = per_round[0]
-    for nxt in per_round[1:]:
-        out = out.unionAll(nxt)
-    return out.orderBy("round")
+    _, merges = _bpe_train(spark, sf_dir)
+    return merges.orderBy("round")
 
 
 def _bpe_sy() -> F.Column:
@@ -1071,13 +1069,13 @@ _BPE_TRAIN = Memo()
 
 def _bpe_train(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list[DataFrame]]:
+) -> tuple[DataFrame, DataFrame]:
     """The BPE training loop shared by the merge-table and apply keys:
-    returns (final re-segmented vocabulary, per-round 1-row merge
-    DataFrames). Corpus scanned once (memoized cached vocab — shared
-    across the two keys AND evictable, unlike a bare .cache()); each
-    round is a vocab pair count → 1-row argmax → broadcast
-    re-segmentation."""
+    returns (final re-segmented vocabulary, merge table as one literal
+    relation with a row per round that found a pair). Corpus scanned
+    once (memoized cached vocab — shared across the two keys AND
+    evictable, unlike a bare .cache()); each round is a vocab pair
+    count → 1-row argmax → broadcast re-segmentation."""
 
     def _build() -> DataFrame:
         d = load(spark, sf_dir, "documents")
@@ -1172,28 +1170,11 @@ def _bpe_train(
         return v, rows
 
     v, rows = _BPE_TRAIN.get_heavy(spark, sf_dir, build=_train)
-    # one-row JVM relations (range(1) + literal projection), NOT
-    # createDataFrame(list): the latter parallelizes each tiny list
-    # across defaultParallelism partitions through the Python-RDD
-    # serializer — measured 2.6 s and 96 one-row Python tasks just to
-    # union the three merge rows at sf0.1
-    def _one_row(rs: list[tuple]) -> DataFrame:
-        if rs:
-            r, l, rr, cnt = rs[0]
-            return spark.range(1).select(
-                F.lit(r).cast("int").alias("round"),
-                F.lit(l).alias("left_sym"),
-                F.lit(rr).alias("right_sym"),
-                F.lit(cnt).cast("bigint").alias("pair_count"),
-            )
-        return spark.range(0).select(
-            F.lit(0).cast("int").alias("round"),
-            F.lit("").alias("left_sym"),
-            F.lit("").alias("right_sym"),
-            F.lit(0).cast("bigint").alias("pair_count"),
-        )
-
-    return v, [_one_row(rs) for rs in rows]
+    return v, literal_rows_df(
+        spark,
+        [row for rs in rows for row in rs],
+        "round int, left_sym string, right_sym string, pair_count bigint",
+    )
 
 
 @query("text_bpe_apply_merges", oracle=_bpe_apply_oracle())

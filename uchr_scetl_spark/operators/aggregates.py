@@ -180,13 +180,13 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets via the SQL entry point (§3.3)."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("uchr_gs_lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus, COUNT(*) AS n
-        FROM uchr_gs_lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        lineitem=load(spark, sf_dir, "lineitem"),
     )
 
 
@@ -841,37 +841,13 @@ def agg_percentile_exact_distributed(
         # deterministic literal order regardless of task completion
         # order (the small-P branch is ordered by construction)
         t_rows.sort(key=lambda t: (t[1], t[3], t[6]))
-    t_structs = [
-        F.struct(
-            F.lit(chunk).cast("int").alias("chunk"),
-            F.lit(g).alias("l_returnflag"),
-            F.lit(lr).cast("int").alias("lr"),
-            F.lit(qi).cast("int").alias("qi"),
-            F.lit(pos).cast("double").alias("pos"),
-            F.lit(n).cast("long").alias("n"),
-            F.lit(role).alias("role"),
-        )
-        for chunk, g, lr, qi, pos, n, role in t_rows
-    ]
-    if t_structs:
-        # one-row JVM literal relation (the BPE-trainer lesson:
-        # createDataFrame(tiny list) parallelizes across the default
-        # parallelism through the Python-RDD serializer)
-        targets = (
-            spark.range(1)
-            .select(F.explode(F.array(*t_structs)).alias("t"))
-            .select("t.*")
-        )
-    else:  # empty input: no group holds any row, result is empty
-        targets = spark.range(0).select(
-            F.lit(0).cast("int").alias("chunk"),
-            F.lit("").alias("l_returnflag"),
-            F.lit(0).cast("int").alias("lr"),
-            F.lit(0).cast("int").alias("qi"),
-            F.lit(0.0).alias("pos"),
-            F.lit(0).cast("long").alias("n"),
-            F.lit("").alias("role"),
-        )
+    # empty input: no target rows, so the result is empty
+    targets = literal_rows_df(
+        spark,
+        t_rows,
+        "chunk int, l_returnflag string, lr int, qi int, pos double, "
+        "n bigint, role string",
+    )
     w_loc = Window.partitionBy("chunk", "l_returnflag").orderBy(
         "l_extendedprice"
     )

@@ -2,10 +2,17 @@
 
 Everything else in the registry drives the DataFrame API; analysts
 drive SQL strings. This module proves the textual surface end-to-end:
-temp-view registration, multi-CTE composition, window + join + agg in
-one statement — compiled by the same Catalyst pipeline to the same
-physical plans (the DataFrame and SQL paths share the optimizer, so
-every plan property asserted in tests/test_plans.py holds here too).
+multi-CTE composition, window + join + agg in one statement — compiled
+by the same Catalyst pipeline to the same physical plans (the
+DataFrame and SQL paths share the optimizer, so every plan property
+asserted in tests/test_plans.py holds here too).
+
+Tables reach the text as ``spark.sql`` keyword arguments
+(``spark.sql(text, orders=df)`` fills ``{orders}``): PySpark binds each
+frame to a uuid-named view and drops it once the query is analyzed.
+A fixed-name temp view would stay in the caller's session, and two
+threads building the same key over different corpora would read each
+other's view.
 """
 
 from __future__ import annotations
@@ -47,9 +54,9 @@ LIMIT 50
 )
 def sql_cte_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-CTE SQL text executed verbatim via ``spark.sql`` over
-    registered temp views — the identical string (modulo view names)
-    is the oracle, so this key checks dialect parity, not just
-    results.
+    DataFrames bound as keyword arguments — the identical string
+    (modulo table names) is the oracle, so this key checks dialect
+    parity, not just results.
 
     Scale notes: the ORDER BY+LIMIT tail compiles to
     TakeOrderedAndProject (bounded per-partition heaps), NOT a global
@@ -57,9 +64,11 @@ def sql_cte_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     same physical operator; the CTE boundary is no optimization
     fence in Spark (CTEs inline), so the status filter still pushes
     into the orders scan."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("sql_orders")
-    load(spark, sf_dir, "customer").createOrReplaceTempView("sql_customer")
-    return spark.sql(_SQL.format(orders="sql_orders", customer="sql_customer"))
+    return spark.sql(
+        _SQL,
+        orders=load(spark, sf_dir, "orders"),
+        customer=load(spark, sf_dir, "customer"),
+    )
 
 
 @query(
@@ -157,8 +166,7 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain partial+final count on part_id. Unbounded recursion over a
     multiplicative join would NOT scale — the bounded-frontier shape
     here is the one to copy."""
-    load(spark, sf_dir, "part").createOrReplaceTempView("sql_part")
-    return spark.sql(_RECURSIVE_SQL.format(part="sql_part"))
+    return spark.sql(_RECURSIVE_SQL, part=load(spark, sf_dir, "part"))
 
 
 # Spark 4.1 SQL pipe syntax (SPARK-49555): each |> stage is one
@@ -209,8 +217,7 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     the status predicate pushed down; the money sum rides exact
     integer cents (the floor+0.5 quantization every decimal sum in
     the repo uses)."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("sql_pipe_orders")
-    return spark.sql(_PIPE_SQL.format(orders="sql_pipe_orders"))
+    return spark.sql(_PIPE_SQL, orders=load(spark, sf_dir, "orders"))
 
 
 _GBA_SQL = """
@@ -248,8 +255,7 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan-wise the keyword resolves at analysis time: the same
     partial+final hash aggregate over the pushed-down filtered scan
     as the explicit form, zero physical difference."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("sql_gba_orders")
-    return spark.sql(_GBA_SQL.format(orders="sql_gba_orders"))
+    return spark.sql(_GBA_SQL, orders=load(spark, sf_dir, "orders"))
 
 
 # the named-parameter surface: the SAME text runs with :markers bound
@@ -290,8 +296,8 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parameters resolve before optimization, so the bound predicate
     pushes into the parquet scan like any literal (plan-asserted) —
     parameterization costs nothing at any scale."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("sql_param_orders")
     return spark.sql(
-        _PARAM_SQL.format(orders="sql_param_orders"),
+        _PARAM_SQL,
         args={"min_price": _PARAM_MIN_PRICE, "status": _PARAM_STATUS},
+        orders=load(spark, sf_dir, "orders"),
     )

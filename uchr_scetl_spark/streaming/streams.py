@@ -74,15 +74,6 @@ def tumbling_counts_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def sliding_avg_stream(events: DataFrame) -> DataFrame:
-    return (
-        events.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-
-
 def session_windows_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Native streaming sessionization (``session_window``)."""
     return (

@@ -176,15 +176,14 @@ class TokenEmitter:
 def udtf_explode_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (Spark 4): custom one-to-many row emitter with
     position — the extensible version of posexplode."""
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 20)
-    d.createOrReplaceTempView("uchr_udtf_docs")
     spark.udtf.register("uchr_token_emitter", TokenEmitter)
     return spark.sql(
         """
         SELECT d.doc_id, t.pos, t.token, t.token_len
-        FROM uchr_udtf_docs d,
+        FROM {docs} d,
              LATERAL uchr_token_emitter(d.text) t
-        """
+        """,
+        docs=load(spark, sf_dir, "documents").where(F.col("doc_id") < 20),
     )
 
 
