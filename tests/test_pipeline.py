@@ -269,7 +269,7 @@ def test_ab_lift_degenerate_pool_yields_null_z(spark):
                     )
                 )
         spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long,"
+            rows, "event_id long, ts timestamp_ntz, user_id long,"
             " event_type string, value double, props string"
         ).write.mode("overwrite").parquet(f"{out}/events.parquet")
         res = load_registry()["events_ab_lift"].fn(spark, out).collect()[0]

@@ -203,18 +203,23 @@ SQL_TEXT_KEYS = [
 
 def test_sql_text_keys_leave_no_view_in_the_session(spark):
     """Building a key must not register anything in the caller's
-    catalog. A fixed-name temp view leaks into the session and races:
-    two threads building the same key over different corpora replace
-    each other's view between registration and analysis, so one can
-    read the other's corpus. A fresh session (shared SparkContext)
-    starts with no views that earlier tests left behind."""
+    catalog, neither a view nor a function. A fixed-name temp view or
+    temporary function leaks into the session and races: two threads
+    building the same key over different corpora replace each other's
+    registration between registration and analysis, so one can read
+    the other's corpus. A fresh session (shared SparkContext) starts
+    with no views or functions that earlier tests left behind."""
     from uchr_scetl_spark import load_registry
 
     from .conftest import SF_SMOKE
 
+    def temp_functions():
+        return sorted(f.name for f in session.catalog.listFunctions() if f.isTemporary)
+
     session = spark.newSession()
     registry = load_registry()
-    before = session.catalog.listTables()
+    views, functions = session.catalog.listTables(), temp_functions()
     for key in SQL_TEXT_KEYS:
         registry[key].fn(session, SF_SMOKE)
-    assert session.catalog.listTables() == before
+    assert session.catalog.listTables() == views
+    assert temp_functions() == functions, set(temp_functions()) - set(functions)

@@ -6,6 +6,10 @@ exchanges, absence of shuffles, top-k physical operators, partial
 aggregation, codegen spans — so plan quality is reviewable as text
 without rerunning Spark. tests/test_plans.py asserts the same
 properties mechanically; this document is the human-readable twin.
+Each key is planned after ``clear_caches()``, so no relation memoized
+by an earlier key turns up as an ``InMemoryTableScan``, and exchange
+plan ids and scratch-dir names are masked: two runs on one tree write
+the same bytes.
 
 ``--dump`` writes the whole captured plan of named keys instead:
 ``OUTDIR/<key>_<SUFFIX>.txt`` per key, the before/after plan artifacts
@@ -22,11 +26,12 @@ import io
 import os
 import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from uchr_scetl_spark import get_session, load_registry  # noqa: E402
+from uchr_scetl_spark import clear_caches, get_session, load_registry  # noqa: E402
 
 # key -> (what to show, regexes whose matching lines are the evidence)
 AUDITS: dict[str, tuple[str, list[str]]] = {
@@ -703,6 +708,20 @@ AUDITS: dict[str, tuple[str, list[str]]] = {
 }
 
 
+# tokens that differ between runs of the same plan: Spark's global
+# exchange counter and the random names of scratch dirs
+_VOLATILE = [
+    (re.compile(r"plan_id=\d+"), "plan_id=_"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\]\s,]+"), "<tmpdir>"),
+]
+
+
+def _stable(line: str) -> str:
+    for rx, sub in _VOLATILE:
+        line = rx.sub(sub, line)
+    return line
+
+
 def formatted_plan(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -718,6 +737,7 @@ def dump(outdir: str, suffix: str, rest: list[str]) -> int:
     registry = load_registry()
     spark = get_session("uchr-plan-audit")
     for key in rest:
+        clear_caches()  # a relation memoized by an earlier key would show as InMemoryTableScan
         path = os.path.join(outdir, f"{key}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(formatted_plan(registry[key].fn(spark, sf_dir)))
@@ -757,6 +777,7 @@ def main() -> int:
     SPECIAL = {"etl_observe_metrics": _observed_load}
 
     for key, (claim, patterns) in AUDITS.items():
+        clear_caches()  # each section shows the key's plan alone
         plan = formatted_plan(SPECIAL.get(key, registry[key].fn)(spark, sf_dir))
         lines = plan.splitlines()
         evidence: list[str] = []
@@ -765,7 +786,7 @@ def main() -> int:
             hits = [ln.strip() for ln in lines if rx.search(ln)]
             seen = set()
             for h in hits:
-                short = re.sub(r"\s+", " ", h)[:160]
+                short = _stable(re.sub(r"\s+", " ", h))[:160]
                 if short not in seen:
                     seen.add(short)
                     evidence.append(short)

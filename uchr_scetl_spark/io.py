@@ -9,10 +9,15 @@ driver. The ``events`` nanosecond normalisation is a column expression
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from .schemas import LOGICAL, TABLES, table_path
+from .memo import Memo
+from .schemas import EVENTS_RAW, LOGICAL, TABLES, table_path
 from .session import configure
 
 
@@ -31,22 +36,159 @@ def scratch_dir(prefix: str) -> str:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one corpus table as its LOGICAL schema.
+    """Load one corpus table with its declared ``LOGICAL`` schema.
 
-    ``events.ts`` is stored as parquet TIMESTAMP(NANOS) which Spark's
-    vectorized reader rejects; with ``nanosAsLong`` (set by
-    ``configure``) it arrives as INT64 nanos and is truncated to
-    microseconds — the same truncation every µs-native engine applies.
+    The reader is given the schema, so no Spark job runs to infer one;
+    :func:`read_parquet` checks it once against the table's own parquet
+    footer on the driver and raises ``ValueError`` on any difference.
+
+    ``events.ts`` may be stored as parquet TIMESTAMP(NANOS), which
+    Spark's vectorized reader rejects. When the footer says so, the
+    table is read as ``EVENTS_RAW``: with ``nanosAsLong`` (set by
+    ``configure``) ``ts`` arrives as INT64 nanos and is truncated to
+    microseconds, the same truncation every µs-native engine applies.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    return read_parquet(spark, table_path(sf_dir, name), name)
+
+
+# Footer checks, one per (path, declared schema). The memo's corpus
+# fingerprint and the path's own stat change when a table is rewritten
+# in place, so a rewritten table is checked again.
+_FOOTER_CHECKS = Memo(evict=False)
+
+
+def read_parquet(spark: SparkSession, path: str, schema) -> DataFrame:
+    """Parquet source with a declared schema (table name or StructType).
+
+    Before the first read of ``path`` the schema is compared with the
+    parquet footer of its first data file (a directory's first file in
+    sorted order, skipping ``_*`` and ``.*`` names: the one file Spark's
+    own non-merging inference reads). Column names, order and types
+    must match; a tz-naive timestamp counts as ``timestamp_ntz`` and
+    hive partition directories supply their own columns. Any difference
+    raises ``ValueError``: a reader given a schema would otherwise fill
+    a missing column with NULL without a word. The check runs with
+    pyarrow on the driver and starts no Spark job."""
     configure(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    key = schema if isinstance(schema, str) else schema.json()
+    read_schema = _FOOTER_CHECKS.get(
+        spark, os.path.dirname(path), path, key, _stat(path),
+        build=lambda: _checked_schema(path, schema),
+    )
+    df = spark.read.schema(read_schema).parquet(path)
+    if read_schema is EVENTS_RAW:
         df = df.withColumn(
             "ts", F.expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)")
         )
     return df
+
+
+def _stat(path: str) -> tuple | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size, st.st_ino
+
+
+def _checked_schema(path: str, schema) -> StructType:
+    """The schema to read ``path`` with: the declared one, or
+    ``EVENTS_RAW`` for an ``events`` table whose ``ts`` is stored as
+    nanos. Raises ``ValueError`` when the footer disagrees with it."""
+    want = _schema_of(schema)
+    footer = _footer(path)
+    if footer is None:  # a directory without data files reads as empty
+        return want
+    file, found, nanos, parts = footer
+    if schema == "events" and "ts" in nanos:
+        want = EVENTS_RAW
+    declared = [(f.name, f.dataType.simpleString()) for f in want.fields
+                if f.name not in parts]
+    got = list(found.items())
+    if got == declared:
+        return want
+
+    def shown(col: str) -> str:
+        t = found[col]
+        return f"{t} (stored as TIMESTAMP(NANOS))" if col in nanos else t
+
+    i = next(i for i, (d, g) in enumerate(zip(declared + [None], got + [None])) if d != g)
+    if i == len(declared):
+        problem = f"column {got[i][0]!r} ({shown(got[i][0])}) is not declared"
+    else:
+        name, typ = declared[i]
+        if name not in found:
+            problem = f"column {name!r} (declared {typ}) is missing"
+        elif got[i][0] != name:
+            problem = (f"column {name!r} is at position {list(found).index(name)}, "
+                       f"declared at position {i}")
+        else:
+            problem = f"column {name!r} has type {shown(name)}, declared {typ}"
+    if file != os.path.abspath(path):
+        problem += f" (parquet footer of {file})"
+    raise ValueError(f"{path}: {problem}")
+
+
+def _footer(path: str) -> tuple[str, dict, set, set] | None:
+    """``(file, {column: type}, nanos columns, partition columns)``
+    from one footer under ``path``, or ``None`` for a directory with no
+    data files. Types are as a reader configured by ``configure`` sees
+    them: TIMESTAMP(NANOS) as ``bigint``, INT96 as ``timestamp``."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if "://" in path:
+        filesystem, root = pafs.FileSystem.from_uri(path)
+    else:
+        filesystem, root = pafs.LocalFileSystem(), os.path.abspath(path)
+    info = filesystem.get_file_info(root)
+    if info.type == pafs.FileType.NotFound:
+        raise FileNotFoundError(f"parquet path not found: {path}")
+    file, parts = root, set()
+    if info.type == pafs.FileType.Directory:
+        listing = filesystem.get_file_info(pafs.FileSelector(root, recursive=True))
+        data = sorted(
+            f.path for f in listing
+            if f.type == pafs.FileType.File
+            and not any(
+                seg.startswith(("_", "."))
+                for seg in f.path[len(root):].split("/")
+            )
+        )
+        if not data:
+            return None
+        file = data[0]
+        parts = {
+            seg.split("=", 1)[0]
+            for seg in file[len(root):].split("/")[:-1]
+            if "=" in seg
+        }
+    meta = pq.read_metadata(file, filesystem=filesystem).schema
+    int96 = {
+        meta.column(i).path
+        for i in range(len(meta))
+        if meta.column(i).physical_type == "INT96"
+    }
+    found: dict[str, str] = {}
+    nanos: set[str] = set()
+    for field in meta.to_arrow_schema():
+        t = field.type
+        if field.name in int96:
+            found[field.name] = "timestamp"
+        elif pa.types.is_timestamp(t) and t.unit == "ns":
+            found[field.name] = "bigint"  # spark.sql.legacy.parquet.nanosAsLong
+            nanos.add(field.name)
+        else:
+            try:
+                found[field.name] = from_arrow_type(
+                    t, prefer_timestamp_ntz=True
+                ).simpleString()
+            except TypeError:  # e.g. unsigned ints
+                found[field.name] = f"unmapped parquet type {t}"
+    return file, found, nanos, parts
 
 
 def _schema_of(schema):

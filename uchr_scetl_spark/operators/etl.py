@@ -326,12 +326,10 @@ def etl_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_files = max(1, math.ceil(total_bytes / target_file_size))
 
     compacted = scratch_dir("uchr_compacted_")
-    spark.read.parquet(landing).repartition(n_files, "l_orderkey").write.mode(
-        "overwrite"
-    ).parquet(compacted)
-    return spark.read.parquet(compacted).select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
-    )
+    spark.read.schema(src.schema).parquet(landing).repartition(
+        n_files, "l_orderkey"
+    ).write.mode("overwrite").parquet(compacted)
+    return spark.read.schema(src.schema).parquet(compacted)
 
 
 @query(
@@ -748,6 +746,12 @@ def _zvalue(x: F.Column, y: F.Column, bits: int = 21) -> F.Column:
     return z
 
 
+def _zorder_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
+    )
+
+
 def _zorder_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write orders Z-order-clustered on (o_custkey, order-day) once
     per (app, sf_dir): z-value → repartitionByRange(z) →
@@ -756,12 +760,7 @@ def _zorder_dir(spark: SparkSession, sf_dir: str) -> str:
     makes BOTH dimensions' parquet min/max stats selective."""
 
     def _build() -> str:
-        o = load(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderdate",
-            "o_totalprice",
-        )
+        o = _zorder_source(spark, sf_dir)
         day = F.datediff(F.col("o_orderdate"), F.lit("1992-01-01").cast("date"))
         z = _zvalue(F.col("o_custkey"), day.cast("long"))
         out = scratch_dir("uchr_zorder_")
@@ -809,7 +808,7 @@ def etl_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the same data written date-sorted-only would touch them
     all."""
     out = _zorder_dir(spark, sf_dir)
-    back = spark.read.parquet(out)
+    back = spark.read.schema(_zorder_source(spark, sf_dir).schema).parquet(out)
     lo = F.lit("1996-01-01").cast("timestamp_ntz")
     hi = F.lit("1997-01-01").cast("timestamp_ntz")
     rect = back.where(

@@ -36,7 +36,7 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .io import _schema_of, read_csv, read_json, write_csv, write_json
+from .io import read_csv, read_json, read_parquet, write_csv, write_json
 from .session import configure
 
 _SOURCE_FORMATS = ("parquet", "csv", "json", "orc")
@@ -45,8 +45,12 @@ _SINK_FORMATS = ("parquet", "csv", "json", "orc", "noop")
 
 @dataclass(frozen=True)
 class Source:
-    """A file source. ``schema`` (corpus table name or StructType) is
-    required for text formats — production scans never infer."""
+    """A file source. ``schema`` is a corpus table name or StructType.
+    Text formats require it, since production scans never infer. A
+    parquet source with a schema reads through ``io.read_parquet``: the
+    declared schema, checked once against the file's footer, so the
+    read starts no inference job. Without one, parquet and ORC infer
+    their schema from the files."""
 
     fmt: str
     path: str
@@ -57,6 +61,8 @@ class Source:
         if self.fmt not in _SOURCE_FORMATS:
             raise ValueError(f"unknown source format {self.fmt!r}")
         if self.fmt == "parquet":
+            if self.schema is not None:
+                return read_parquet(spark, self.path, self.schema)
             return spark.read.parquet(self.path)
         if self.fmt == "orc":
             return spark.read.orc(self.path)

@@ -34,7 +34,7 @@ def orders_daily_pipeline(spark: SparkSession, sf_dir: str, out: str) -> Pipelin
     partitioned parquet sink. Split out so the plan-shape test can
     inspect ``.plan(spark)`` without running the sink."""
     return Pipeline(
-        source=Source("parquet", f"{sf_dir}/orders.parquet"),
+        source=Source("parquet", f"{sf_dir}/orders.parquet", schema="orders"),
         steps=[
             Transform(
                 "window_1996",

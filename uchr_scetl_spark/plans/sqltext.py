@@ -98,7 +98,7 @@ def pipeline_declarative(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..pipeline import Pipeline, Sink, Source, SqlTransform, Transform
 
     p = Pipeline(
-        source=Source("parquet", f"{sf_dir}/orders.parquet"),
+        source=Source("parquet", f"{sf_dir}/orders.parquet", schema="orders"),
         steps=[
             Transform(
                 "recent",

@@ -1,11 +1,13 @@
 """Declared schemas for the ten corpus tables (FIXTURES.md).
 
-``RAW`` schemas describe the parquet files as Spark reads them
-(``events.ts`` arrives as raw INT64 nanos under
-``spark.sql.legacy.parquet.nanosAsLong``); ``LOGICAL`` schemas describe
-the tables after io.load() normalisation (ts → TIMESTAMP_NTZ µs).
-Production reads never use schema inference for CSV/JSON — these
-StructTypes are the single source of truth.
+``LOGICAL`` schemas describe the tables as io.load() returns them, and
+they are what the reader is given: io.load() never infers a schema,
+it checks ``LOGICAL`` against each table's parquet footer instead.
+``EVENTS_RAW`` describes an ``events`` file whose ``ts`` is stored as
+TIMESTAMP(NANOS): under ``spark.sql.legacy.parquet.nanosAsLong`` it
+arrives as raw INT64 nanos, and io.load() normalises it to
+TIMESTAMP_NTZ µs. CSV and JSON reads take these StructTypes too; they
+are the single source of truth.
 """
 
 from __future__ import annotations

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..exprs import dec_sum, sql_dec_sum
 from ..io import load
@@ -331,6 +332,10 @@ def stream_locf_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EXACTLY_ONCE = Memo(evict=False)
 
 
+def _exactly_once_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load(spark, sf_dir, "events").select("event_id", "event_type", "value")
+
+
 def _exactly_once_dir(spark: SparkSession, sf_dir: str) -> str:
     """Drive the idempotent foreachBatch sink through a REDELIVERY
     once per (app, sf_dir): all events split by event_id parity into
@@ -343,9 +348,7 @@ def _exactly_once_dir(spark: SparkSession, sf_dir: str) -> str:
     def _build() -> str:
         out = scratch_dir("uchr_exactly_once_")
         sink = idempotent_batch_sink(out)
-        e = load(spark, sf_dir, "events").select(
-            "event_id", "event_type", "value"
-        )
+        e = _exactly_once_source(spark, sf_dir)
         # TOTAL partition (round-9 sweep): `% 2 == 1` silently drops
         # negative-odd (remainder -1) and NULL event_ids from BOTH
         # batches, losing rows the all-events oracle still counts —
@@ -384,7 +387,10 @@ def stream_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncate-mode loss, and partial-batch commits are all caught by
     the same equality."""
     out = _exactly_once_dir(spark, sf_dir)
-    back = spark.read.parquet(out)
+    # the sink's batch_id=N/ directories add the partition column
+    fields = _exactly_once_source(spark, sf_dir).schema.fields
+    batch_id = StructField("batch_id", IntegerType())
+    back = spark.read.schema(StructType([*fields, batch_id])).parquet(out)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         dec_sum("value", "total_value"),

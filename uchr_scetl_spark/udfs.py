@@ -175,15 +175,12 @@ class TokenEmitter:
 )
 def udtf_explode_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (Spark 4): custom one-to-many row emitter with
-    position — the extensible version of posexplode."""
-    spark.udtf.register("uchr_token_emitter", TokenEmitter)
-    return spark.sql(
-        """
-        SELECT d.doc_id, t.pos, t.token, t.token_len
-        FROM {docs} d,
-             LATERAL uchr_token_emitter(d.text) t
-        """,
-        docs=load(spark, sf_dir, "documents").where(F.col("doc_id") < 20),
+    position — the extensible version of posexplode. The UDTF is called
+    in a lateral join, not registered, so building the key adds no
+    temporary function to the caller's session."""
+    docs = load(spark, sf_dir, "documents").where(F.col("doc_id") < 20)
+    return docs.lateralJoin(TokenEmitter(F.col("text").outer())).select(
+        "doc_id", "pos", "token", "token_len"
     )
 
 
